@@ -110,9 +110,15 @@ final case class DedupConfig(
       * fall back to star edges around the bucket-min doc (connectivity
       * preserved for CC, quadratic blowup avoided — SURVEY.md §4 skew). */
     bucketCap: Int = 64,
+    /** iteration cap of the CC hash-min loop. Like ccCheckpointEvery and
+      * ccBatchIters, it applies only to dup graphs above
+      * [[graft.operators.ConnectedComponents.SingleTaskMaxEdges]]
+      * symmetric edges; smaller graphs are solved in one union-find
+      * task with no loop. */
     ccMaxIters: Int = 25,
     /** RELIABLE-checkpoint cadence (rounds) for the CC loop, effective
-      * only when the SparkContext has a checkpoint dir (Pipeline runs).
+      * only when the SparkContext has a checkpoint dir (Pipeline runs)
+      * and the dup graph is above the single-task bound.
       * Plan truncation itself is free and happens every round via lazy
       * plan boundaries (Catalyst re-analysis of a compound plan costs
       * multi-second DRIVER time per extra iteration of depth —
@@ -130,7 +136,8 @@ final case class DedupConfig(
       * fixed cost) runs fastest at 3, while multi-executor clusters
       * (per-stage dispatch on every extra iteration) run fastest at 1
       * — so 0 = AUTO picks by master: 3 for local[...], 1 otherwise.
-      * Any positive value pins it. */
+      * Any positive value pins it. Loop-only: no effect at or below
+      * the single-task bound. */
     ccBatchIters: Int = 0,
     seed: Long = 42L) {
   require(numHashes == bands * rowsPerBand, "numHashes must equal bands*rowsPerBand")

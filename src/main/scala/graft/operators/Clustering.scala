@@ -76,7 +76,9 @@ object Clustering {
     * (/root/reference/src/dedup.c:150-173) is the ts_min order rule in
     * [[assign]]; this operator generalizes the order key.
     *
-    * @param scores (conv_id, `scoreCol`) — one row per conv_id;
+    * @param scores (conv_id, `scoreCol`) — one row per conv_id
+    *               expected; repeated conv_ids keep their highest
+    *               score, so the output stays one row per conv_id;
     *               missing docs score Long.MinValue + 1 (never elected
     *               unless the whole cluster is missing; the +1 keeps
     *               the negation below free of two's-complement
@@ -89,8 +91,12 @@ object Clustering {
       scores: DataFrame,
       scoreCol: String = "quality_score"): Dataset[ClusterAssign] = {
     import spark.implicits._
+    // one score per conv_id, so the left join cannot multiply assignment
+    // rows when a caller's score table repeats a conv_id; the max keeps
+    // the election deterministic when the repeats disagree
+    val oneScore = scores.groupBy($"conv_id").agg(max(col(scoreCol).cast("long")).as("sc"))
     val scored = assigns.toDF
-      .join(scores.select($"conv_id", col(scoreCol).cast("long").as("sc")), Seq("conv_id"), "left")
+      .join(oneScore, Seq("conv_id"), "left")
       .withColumn("sc", greatest(coalesce($"sc", lit(Long.MinValue + 1)), lit(Long.MinValue + 1)))
     // min(struct(-score, conv_id)): highest score first, then smallest
     // conv_id — as a window aggregate over the cluster partition (the

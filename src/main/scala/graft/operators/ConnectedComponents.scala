@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** Connected components over dup-pair edges as an iterative DataFrame
+/** Connected components over dup-pair edges: one in-task union-find
+  * pass when the graph fits a task, otherwise an iterative DataFrame
   * algorithm — hash-min label propagation with pointer jumping (the
   * public "hash-to-min" family, Rastogi et al. ICDE'13; no GraphX, no
   * RDDs per north_rule).
@@ -16,8 +17,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * Each iteration: comp(v) ← min(comp(v), min_{(u,v)∈E} comp(u)), then
   * two pointer-jumping steps comp(v) ← comp(comp(v)) which cut path
-  * lengths 4×, giving O(log d) convergence on diameter-d components
-  * with few driver round-trips.
+  * lengths 4× where ids increase along a path, giving O(log d)
+  * convergence there. On chains with randomly ordered ids convergence
+  * is linear in d: a simulation of this update (without the seed pass)
+  * needed 38-83 iterations on 200-node random-id chains, past the
+  * default maxIters of 25 (graphs that small take the single-task path
+  * below).
   *
   * Labels are DICTIONARY-ENCODED before the loop: each distinct node id
   * gets a dense 64-bit code (shuffle-partition id << 40 | in-partition
@@ -27,25 +32,43 @@ import org.apache.spark.storage.StorageLevel
   * after convergence by a per-component min(conv_id) regroup, so the
   * output is bit-identical to the un-encoded algorithm.
   *
-  * Driver round-trips: ONE job per ROUND of `batchIters` iterations
-  * (0 = auto by deployment shape; see [[graft.DedupConfig.ccBatchIters]]) —
-  * intermediate iterations end at lazy plan boundaries
-  * ([[org.apache.spark.sql.GraftPlanBridge.planBoundary]]) so the whole
-  * batch executes as a single job, and the convergence metric (sum of
-  * label hashes, which only ever decreases) rides the materializing
-  * action itself as an `observe()` metric instead of a separate
-  * collect. Plan truncation between rounds is FREE: each round starts
-  * from a lazy plan boundary over the previous round's persisted
-  * blocks (no truncation job — an earlier revision paid an eager
-  * localCheckpoint per round, the dominant input-independent serial
-  * cost in cluster mode). When the SparkContext has a checkpoint dir
-  * configured, every `checkpointEvery` rounds the round is additionally
-  * RELIABLY checkpointed (survives executor loss on a real cluster;
-  * the round is persisted first so the checkpoint-write job re-reads
-  * cache instead of recomputing). Every superseded round's blocks —
-  * including the initial label table — are unpersisted as soon as the
-  * next round is material, so repeated CC invocations in one session do
-  * not accumulate dead blocks.
+  * Driver round-trips — two regimes, split on the symmetric distinct
+  * edge count `nEdges` that the symmetrize job counts anyway:
+  *
+  *  - `nEdges` ≤ [[SingleTaskMaxEdges]] (2^20): the whole graph is
+  *    solved in ONE task — the cached symmetric edges coalesce to a
+  *    single partition and an in-task union-find ([[singleTaskLabels]])
+  *    emits (conv_id, lexicographic min member) for every node. One job
+  *    after the count; no dictionary, no loop, no decode. A symmetric
+  *    distinct edge set has no more nodes than edges, so the bound also
+  *    caps the task's node count. Task heap at the bound, measured
+  *    at the pass's peak (input exhausted, id map full) on JDK 17 with
+  *    compressed oops: 123 MB for 2^20 distinct 12-char ids (2^19
+  *    disjoint pairs, the node-count worst case); each further id byte
+  *    adds ~1 MB. That stays under a 256 MB task budget. A distributed
+  *    LSH join's output graph is far smaller than its corpus, so this
+  *    is the common case; the hash-min loop only pays off when the
+  *    graph outgrows one worker.
+  *  - above the bound: the dictionary-encoded hash-min loop. ONE job
+  *    per ROUND of `batchIters` iterations (0 = auto by deployment
+  *    shape; see [[graft.DedupConfig.ccBatchIters]]) — intermediate
+  *    iterations end at lazy plan boundaries
+  *    ([[org.apache.spark.sql.GraftPlanBridge.planBoundary]]) so the
+  *    whole batch executes as a single job, and the convergence metric
+  *    (sum of label hashes, which only ever decreases) rides the
+  *    materializing action itself as an `observe()` metric instead of
+  *    a separate collect. Plan truncation between rounds is FREE: each
+  *    round starts from a lazy plan boundary over the previous round's
+  *    persisted blocks. When the SparkContext has a checkpoint dir
+  *    configured, every `checkpointEvery` rounds the round is
+  *    additionally RELIABLY checkpointed (survives executor loss on a
+  *    real cluster; the round is persisted first so the
+  *    checkpoint-write job re-reads cache instead of recomputing).
+  *    Every superseded round's blocks — including the initial label
+  *    table — are unpersisted as soon as the next round is material,
+  *    so repeated CC invocations in one session do not accumulate dead
+  *    blocks. `maxIters`, `checkpointEvery` and `batchIters` only
+  *    apply in this regime.
   *
   * Skew: star-capped candidate generation upstream keeps component
   * diameter small; the groupBy(dst) min-aggregation is a partial
@@ -61,12 +84,22 @@ object ConnectedComponents {
   // via the shared [[Retire]] slot: at most one live label table per
   // session instead of one per invocation.
 
+  /** Largest symmetric distinct edge count solved in a single task
+    * (see the class doc: it also bounds the task's node count). */
+  final val SingleTaskMaxEdges: Long = 1L << 20
+
   /** edges: DataFrame with string columns (doc_a, doc_b).
     * @return (conv_id, cluster_id) where cluster_id = min member id.
     *         Valid until the next run() on the SAME SparkSession (blocks
     *         are then freed); persist/write it first if you need it
     *         longer, or run from another session to hold two results. */
-  def run(spark: SparkSession, edges: DataFrame, maxIters: Int = 25, checkpointEvery: Int = 1, batchIters: Int = 0): DataFrame = {
+  def run(spark: SparkSession, edges: DataFrame, maxIters: Int = 25, checkpointEvery: Int = 1, batchIters: Int = 0): DataFrame =
+    run(spark, edges, maxIters, checkpointEvery, batchIters, SingleTaskMaxEdges)
+
+  /** [[run]] with the single-task bound exposed, so specs can force the
+    * hash-min loop (`singleTaskMaxEdges = 0`) on graphs of any size. */
+  private[graft] def run(spark: SparkSession, edges: DataFrame, maxIters: Int, checkpointEvery: Int,
+      batchIters: Int, singleTaskMaxEdges: Long): DataFrame = {
     import spark.implicits._
     // batchIters = 0 → AUTO by deployment shape (DedupConfig.ccBatchIters
     // scaladoc has the measurements): in-process local masters have no
@@ -112,6 +145,20 @@ object ConnectedComponents {
     // its corpus, and a fixed session-width dict means hundreds of
     // near-empty tasks in every downstream stage.
     val nEdges = symWide.count()
+    lap("sym")
+    if (nEdges <= singleTaskMaxEdges) {
+      // the whole graph fits one task: one union-find pass over the
+      // cached symmetric edges replaces dictionary, loop and decode
+      val out = symWide.as[(String, String)]
+        .coalesce(1)
+        .mapPartitions(singleTaskLabels)
+        .toDF("conv_id", "cluster_id")
+        .localCheckpoint(true)
+      symWide.unpersist(false)
+      Retire.swap(spark, "cc_labels", out)
+      lap("local")
+      return out
+    }
     val sessionShuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val dictParts = math.max(1L, math.min(sessionShuffleParts.toLong,
       (nEdges + 32767L) / 32768L)).toInt
@@ -155,7 +202,6 @@ object ConnectedComponents {
     // count (one full driver round-trip per CC call in cluster mode —
     // the exact fixed cost this path exists to cut).
     val nLabelsEst = if (nEdges == 0) 0L else math.max(nEdges / 2, 1L)
-    lap("sym+dict")
     symCoded.count()
     symWide.unpersist(false)
     // PLAN boundaries over the two cached frames every later step reads:
@@ -215,12 +261,70 @@ object ConnectedComponents {
     out
   }
 
+  /** Single-task connected components over string-id edges: every
+    * node → its component's least member under Spark's string order
+    * (UTF-8 bytes, so labels equal the loop's `min(conv_id)` decode
+    * even outside the BMP, where `String.compareTo` disagrees). The
+    * output SET is a pure function of the edge set — membership is
+    * order-independent and each label is a min over members — so task
+    * retries reproduce it. Heap: one map entry + one id string per
+    * node, ints for the union-find (see the class doc's measurement). */
+  private[graft] def singleTaskLabels(it: Iterator[(String, String)]): Iterator[(String, String)] = {
+    val slotOf = new java.util.HashMap[String, Integer](1 << 14)
+    val ids = scala.collection.mutable.ArrayBuffer.empty[String]
+    val uf = new UnionFind(1 << 14)
+    def slot(id: String): Int = {
+      val known = slotOf.get(id)
+      if (known != null) known.intValue
+      else { val k = uf.add(); slotOf.put(id, k); ids += id; k }
+    }
+    it.foreach { case (s, d) => uf.union(slot(s), slot(d)) }
+    slotOf.clear() // the label pass needs only ids and the union-find
+    def utf8(i: Int) = org.apache.spark.unsafe.types.UTF8String.fromString(ids(i))
+    val minOf = Array.fill(uf.size)(-1)
+    var i = 0
+    while (i < uf.size) {
+      val r = uf.find(i)
+      if (minOf(r) < 0 || utf8(i).binaryCompare(utf8(minOf(r))) < 0) minOf(r) = i
+      i += 1
+    }
+    Iterator.range(0, uf.size).map(j => (ids(j), ids(minOf(uf.find(j)))))
+  }
+
+  /** Growable union-find over dense slots 0 until `size`: path halving,
+    * union links the larger root under the smaller. The ONE union-find
+    * of the CC operator — shared by the loop's partition-local seed
+    * pass ([[localSeeds]]) and the single-task solve
+    * ([[singleTaskLabels]]); callers map their keys to slots and pick
+    * the component label (min key) themselves. */
+  private[operators] final class UnionFind(initialCapacity: Int) {
+    private var parent = new Array[Int](math.max(initialCapacity, 16))
+    private var n = 0
+    def size: Int = n
+    /** A new singleton; returns its slot. */
+    def add(): Int = {
+      if (n == parent.length) parent = java.util.Arrays.copyOf(parent, n * 2)
+      parent(n) = n
+      n += 1
+      n - 1
+    }
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+    }
+  }
+
   /** Partition-local union-find over a stream of coded (src, dst)
     * edges: emits (node, localComponentMin) for every node whose local
     * min differs from itself (identity rows come from the dict overlay
     * in the caller). Primitive arrays throughout — an open-addressing
-    * long table (≤50% load) indexing a parent array with path halving —
-    * so the per-task footprint is ~24 B/node, GROWN on demand (the
+    * long table (≤50% load) mapping ids to [[UnionFind]] slots — so the
+    * per-task footprint is ~24 B/node, GROWN on demand (the
     * table starts at 2^14 slots and doubles; a task's allocation tracks
     * its partition's distinct-node count, never the worst-case `cap`:
     * executors run many tasks concurrently, and paying ~110 MB per task
@@ -238,14 +342,8 @@ object ConnectedComponents {
     var mask = tableSize - 1
     var keys = Array.fill[Long](tableSize)(-1L) // coded ids are ≥ 0
     var slotOf = new Array[Int](tableSize)
-    var parent = new Array[Int](math.min(cap, tableSize / 2))
-    var n = 0
+    val uf = new UnionFind(math.min(cap, tableSize / 2))
     var overflow = false
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
     // golden-ratio spread (public constant, same family as Hashing)
     def tableIdx(id: Long): Int = {
       val h = id * -7046029254386353131L
@@ -267,39 +365,34 @@ object ConnectedComponents {
     def slot(id: Long): Int = {
       val i = tableIdx(id)
       if (keys(i) == id) slotOf(i)
-      else if (n >= cap) { overflow = true; -1 }
+      else if (uf.size >= cap) { overflow = true; -1 }
       else {
-        if (n == parent.length)
-          parent = java.util.Arrays.copyOf(parent, math.min(cap, parent.length * 2))
-        keys(i) = id; slotOf(i) = n; parent(n) = n; n += 1
+        keys(i) = id; slotOf(i) = uf.add()
         // keep load ≤ 50%; re-probe not needed for the slot just written
-        if (n * 2 >= tableSize && tableSize < maxTable) grow()
-        n - 1
+        if (uf.size * 2 >= tableSize && tableSize < maxTable) grow()
+        uf.size - 1
       }
     }
     while (it.hasNext && !overflow) {
       val (s, d) = it.next()
       val a = slot(s)
       val b = if (a < 0) -1 else slot(d)
-      if (b >= 0) {
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
+      if (b >= 0) uf.union(a, b)
     }
     if (overflow) Iterator.empty
     else {
-      val minId = Array.fill[Long](n)(Long.MaxValue)
+      val minId = Array.fill[Long](uf.size)(Long.MaxValue)
       var i = 0
       while (i < tableSize) {
         if (keys(i) >= 0) {
-          val r = find(slotOf(i))
+          val r = uf.find(slotOf(i))
           if (keys(i) < minId(r)) minId(r) = keys(i)
         }
         i += 1
       }
       (0 until tableSize).iterator
-        .filter(j => keys(j) >= 0 && minId(find(slotOf(j))) != keys(j))
-        .map(j => (keys(j), minId(find(slotOf(j)))))
+        .filter(j => keys(j) >= 0 && minId(uf.find(slotOf(j))) != keys(j))
+        .map(j => (keys(j), minId(uf.find(slotOf(j)))))
     }
   }
 

@@ -592,12 +592,17 @@ object GraftFunctions {
     "graft_bloom_contains" -> (cs => BloomFilterMightContain(cs.head, cs(1))),
   )
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit = builders.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft.plans.GraftKernels", null, name),
-      builder)
+  /** Idempotent per-session registration: a function the session's
+    * registry already holds (an earlier call, or [[GraftExtensions]]) is
+    * left alone — re-registering would swap in an equal builder and log
+    * a "replaced a previously registered function" warning per name. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo("graft.plans.GraftKernels", null, name), builder)
+    }
   }
 }
 

@@ -21,7 +21,10 @@ class CcCheckpointSpec extends SparkSpec {
     // EVERY iteration
     val edges = ((0 until 9).map(i => (s"n$i", s"n${i + 1}")) ++
       Seq(("p0", "p1"), ("q0", "q1"))).toDF("doc_a", "doc_b")
-    val out = ConnectedComponents.run(spark, edges, maxIters = 25, checkpointEvery = 1)
+    // singleTaskMaxEdges = 0: the reliable checkpoint lives in the
+    // hash-min loop, which this tiny graph would otherwise skip
+    val out = ConnectedComponents.run(spark, edges, maxIters = 25, checkpointEvery = 1,
+      batchIters = 0, singleTaskMaxEdges = 0L)
     val got = out.as[(String, String)].collect().toMap
     assert(got.size == 14)
     assert((0 to 9).forall(i => got(s"n$i") == "n0"))
@@ -68,9 +71,10 @@ class CcCheckpointSpec extends SparkSpec {
     // multi-round convergence and the inside-batch fixpoint detection
     val edges = ((0 until 20).map(i => (s"n$i", s"n${i + 1}")) ++
       (1 to 5).map(i => ("hub", s"s$i")) ++ Seq(("x0", "x1"))).toDF("doc_a", "doc_b")
-    val perIter = ConnectedComponents.run(spark, edges, batchIters = 1)
+    // singleTaskMaxEdges = 0 forces the loop that batchIters configures
+    val perIter = ConnectedComponents.run(spark, edges, 25, 1, batchIters = 1, singleTaskMaxEdges = 0L)
       .as[(String, String)].collect().toMap
-    val batched = ConnectedComponents.run(spark, edges, batchIters = 3)
+    val batched = ConnectedComponents.run(spark, edges, 25, 1, batchIters = 3, singleTaskMaxEdges = 0L)
       .as[(String, String)].collect().toMap
     assert(batched == perIter)
     assert((0 to 20).forall(i => batched(s"n$i") == "n0"))
@@ -81,16 +85,20 @@ class CcCheckpointSpec extends SparkSpec {
     import spark.implicits._
     val edges = ((0 until 9).map(i => (s"n$i", s"n${i + 1}")) ++
       Seq(("p0", "p1"), ("q0", "q1"))).toDF("doc_a", "doc_b")
-    // settle: one run whose output stays live (the retire-previous
-    // policy keeps exactly one label table alive)
-    ConnectedComponents.run(spark, edges).count()
-    val baseline = spark.sparkContext.getPersistentRDDs.size
-    (1 to 3).foreach { _ =>
-      assert(ConnectedComponents.run(spark, edges).count() == 14)
-      // each run retires the previous output before registering its
-      // own, so the live-block census must not grow with invocations
-      assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
-        s"CC leaked cached blocks: ${spark.sparkContext.getPersistentRDDs.size} > $baseline")
+    // both regimes: the single-task pass (default bound) and the loop
+    Seq(ConnectedComponents.SingleTaskMaxEdges, 0L).foreach { bound =>
+      def runOnce() = ConnectedComponents.run(spark, edges, 25, 1, 0, bound)
+      // settle: one run whose output stays live (the retire-previous
+      // policy keeps exactly one label table alive)
+      runOnce().count()
+      val baseline = spark.sparkContext.getPersistentRDDs.size
+      (1 to 3).foreach { _ =>
+        assert(runOnce().count() == 14)
+        // each run retires the previous output before registering its
+        // own, so the live-block census must not grow with invocations
+        assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
+          s"CC (bound $bound) leaked cached blocks: ${spark.sparkContext.getPersistentRDDs.size} > $baseline")
+      }
     }
   }
 }

@@ -154,7 +154,8 @@ class DetectorSpec extends SparkSpec {
     val n = 64
     val edges = (0 until n - 1)
       .map(i => (f"v$i%03d", f"v${i + 1}%03d")).toDF("doc_a", "doc_b")
-    val comps = ConnectedComponents.run(spark, edges, maxIters = 25)
+    // singleTaskMaxEdges = 0: pointer jumping lives in the hash-min loop
+    val comps = ConnectedComponents.run(spark, edges, 25, 1, 0, singleTaskMaxEdges = 0L)
       .as[(String, String)].collect()
     assert(comps.forall(_._2 == "v000"), comps.filter(_._2 != "v000").take(3).mkString)
   }

@@ -64,6 +64,35 @@ class ExpressionSpec extends SparkSpec {
     assert(!got(1).isNullAt(0))
   }
 
+  test("a second register on a session replaces no function and logs no warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+    val registry = spark.sessionState.functionRegistry
+    def warnings(body: => Unit): Seq[String] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val appender = new AbstractAppender("register-capture", null, null, true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+      }
+      appender.start()
+      val logger = LogManager.getLogger(registry.getClass.getName).asInstanceOf[Logger]
+      logger.addAppender(appender)
+      try body finally { logger.removeAppender(appender); appender.stop() }
+      seen.toArray.map(_.toString).toSeq
+    }
+    val before = registry.lookupFunction(FunctionIdentifier("graft_minhash_sig"))
+    assert(warnings(GraftFunctions.register(spark)).isEmpty) // beforeAll registered once
+    assert(registry.lookupFunction(FunctionIdentifier("graft_minhash_sig")).exists(_ eq before.get))
+    // the capture sees the warning an unguarded re-registration logs
+    val (name, builder) = GraftFunctions.builders.head
+    val forced = warnings(registry.registerFunction(
+      FunctionIdentifier(name), new ExpressionInfo("graft.plans.GraftKernels", null, name), builder))
+    assert(forced.exists(_.contains("replaced a previously registered function")), forced)
+  }
+
   test("non-literal config argument is rejected") {
     import spark.implicits._
     val e = intercept[Exception] {

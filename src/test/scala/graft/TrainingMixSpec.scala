@@ -58,6 +58,18 @@ class TrainingMixSpec extends SparkSpec {
     assert(out == Map("c1" -> "c2", "c2" -> "c2"))
   }
 
+  test("electRepresentative: a repeated score row keeps one row per conv_id") {
+    import spark.implicits._
+    val assigns = Seq(
+      ClusterAssign("c1", "C", "c1", true),
+      ClusterAssign("c2", "C", "c1", false)).toDS()
+    // c1 scored twice (disagreeing): its highest score counts
+    val scores = Seq(("c1", 1L), ("c1", 9L), ("c2", 5L)).toDF("conv_id", "quality_score")
+    val out = Clustering.electRepresentative(spark, assigns, scores).collect()
+    assert(out.length == 2, out.mkString(", "))
+    assert(out.map(a => a.conv_id -> a.representative).toMap == Map("c1" -> "c1", "c2" -> "c1"))
+  }
+
   test("QualityModel.score: mean of term weights, unknown terms 0, empty doc = bias") {
     import spark.implicits._
     val docs = Seq(
