@@ -126,7 +126,7 @@ object Hashing {
 
   /** Same as [[shingleHashes]] but over an already-tokenized hash
     * stream — lets callers that need SEVERAL shingle widths of the same
-    * text (the fused detector kernel) tokenize once. */
+    * text (the `graft_doc_sig` kernel) tokenize once. */
   def shingleHashesFromTokens(th: Array[Long], k: Int): Array[Long] = {
     if (th.isEmpty) return Array.empty
     val n = math.max(1, th.length - k + 1)
@@ -172,8 +172,8 @@ object Hashing {
     * but the hashing cost is O(|shingles| + numHashes) instead of
     * O(|shingles| × numHashes) — a 128× reduction of the permutation
     * loop at the default 128 hashes. (The kernel's other component, the
-    * normalize+tokenize text walk, is shared with simhash via
-    * [[fusedSig]] and unchanged — for short conversational docs it
+    * normalize+tokenize text walk, is shared with simhash via the
+    * `graft_doc_sig` kernel and unchanged — for short conversational docs it
     * dominates, so the end-to-end win grows with document length.)
     *
     * Deterministic pure function of the shingle SET (bin mins are
@@ -306,34 +306,6 @@ object Hashing {
   // Long-substring anchors (suffix-array-pass analog, SURVEY.md §7.7)
   // ---------------------------------------------------------------------
 
-  /** Winnowed anchor hashes of q-token grams: a q-gram is an anchor when
-    * its hash is 0 mod `sample`. Two docs sharing a ≥q-token substring
-    * share all its q-gram hashes, hence (with prob ≥ 1-(1-1/s)^(L-q+1))
-    * at least one anchor — the candidate-join key for the exact
-    * long-substring detector. Reference analog: content-defined chunk
-    * boundaries chosen by `(csum & MASK) == MASK`
-    * (/root/reference/src/chunk.c:91-96) — the same "content decides the
-    * cut points so copies align" idea, applied to token streams. */
-  def substringAnchors(text: String, q: Int, sample: Int): Array[Long] = {
-    // mask-based "≡ 0 mod sample" requires a power of two — any other
-    // value silently changes the sampling rate (DedupConfig enforces
-    // this too; re-checked here for direct callers)
-    require(Integer.bitCount(sample) == 1, s"sample must be a power of two, got $sample")
-    val th = tokenHashes(text)
-    if (th.length < q) return Array.empty
-    val buf = new Array[Long](th.length - q + 1)
-    var n = 0
-    var i = 0
-    while (i + q <= th.length) {
-      var h = 0x1D8E4E27C47D124FL
-      var j = i
-      while (j < i + q) { h = combine(h, th(j)); j += 1 }
-      if ((h & (sample - 1)) == 0) { buf(n) = h; n += 1 }
-      i += 1
-    }
-    sortedDistinct(buf, n)
-  }
-
   /** Every q-gram's 128-bit key WITH its 0-based token start position,
     * interleaved [pos0, hi0, lo0, pos1, hi1, lo1, ...] in stream order
     * and WITHOUT dedup — the span-cut consumer needs every occurrence,
@@ -355,49 +327,6 @@ object Hashing {
     out
   }
 
-  /** Both near-dup signatures of a doc in ONE tokenization pass:
-    * (minhash signature over k1-shingles, 64-bit simhash over
-    * k2-shingles). Bit-identical to calling [[minhashSignature]] ∘
-    * [[shingleHashes]] and [[simhash]] ∘ [[shingleHashes]] separately —
-    * the fusion only removes the duplicate normalize+tokenize walk over
-    * the text, which the two standalone detector kernels each repay.
-    * At corpus scale that walk is a full extra pass over every byte of
-    * every document. */
-  def fusedSig(text: String, k1: Int, numHashes: Int, seed: Long, k2: Int): (Array[Long], Long) = {
-    val th = tokenHashes(text)
-    val mh = minhashSignature(shingleHashesFromTokens(th, k1), numHashes, seed)
-    val sh = simhash(shingleHashesFromTokens(th, k2))
-    (mh, sh)
-  }
-
-  /** ALL THREE detector keys in one tokenization pass: MinHash
-    * signature, SimHash, and the 128-bit winnowed substring anchors
-    * (interleaved [hi, lo, ...]). Bit-identical to [[fusedSig]] +
-    * [[substringAnchors128]] run separately — the fusion removes the
-    * substring detector's own normalize+tokenize walk, the last
-    * remaining extra pass over every byte of every document on the
-    * dedup pipeline's detector stage. */
-  def fusedSig3(text: String, k1: Int, numHashes: Int, seed: Long, k2: Int,
-      q: Int, sample: Int): (Array[Long], Long, Array[Long]) = {
-    val th = tokenHashes(text)
-    val mh = minhashSignature(shingleHashesFromTokens(th, k1), numHashes, seed)
-    val sh = simhash(shingleHashesFromTokens(th, k2))
-    val an = substringAnchors128FromTokens(th, q, sample)
-    (mh, sh, an)
-  }
-
-  /** 128-bit anchor keys, interleaved [hi0, lo0, hi1, lo1, ...] sorted
-    * and deduplicated by (hi, lo). Selection is identical to
-    * [[substringAnchors]] (same grams become anchors, chosen by the
-    * 64-bit `hi` chain), but the JOIN KEY carries a second rolling hash
-    * `lo` with an independent initial state over the same gram. Each
-    * combine step is a different bijection per token sequence, so two
-    * grams colliding on `hi` do not collide on `lo` — the detector's
-    * bucket-match-is-the-decision contract survives the 10^13–10^14
-    * anchor instances of a 10^12-doc corpus, where 64-bit keys cross the
-    * birthday bound (same width rationale as [[graft.Fp]]). Residual
-    * risk is only via two distinct TOKENS colliding at 64 bits inside an
-    * otherwise-identical (q-1)-token context — vanishingly unlikely. */
   /** The shared per-gram 128-bit key derivation: (hi, lo) of the
     * q-token run starting at `i`. ALL gram-key producers
     * ([[substringAnchors128]], [[gramFps128WithPos]]) MUST go through
@@ -412,13 +341,36 @@ object Hashing {
     (h, h2)
   }
 
+  /** Winnowed 128-bit anchor keys of q-token grams, interleaved
+    * [hi0, lo0, hi1, lo1, ...] sorted and deduplicated by (hi, lo). A
+    * q-gram is an anchor when its 64-bit `hi` chain hash is 0 mod
+    * `sample`. Two docs sharing a ≥q-token substring share all its
+    * q-gram keys, hence (with prob ≥ 1-(1-1/s)^(L-q+1)) at least one
+    * anchor — the candidate-join key for the exact long-substring
+    * detector. Reference analog: content-defined chunk boundaries chosen
+    * by `(csum & MASK) == MASK` (the reference's src/chunk.c:91-96) —
+    * the same "content decides the cut points so copies align" idea,
+    * applied to token streams.
+    *
+    * The JOIN KEY carries a second rolling hash `lo` with an independent
+    * initial state over the same gram. Each combine step is a different
+    * bijection per token sequence, so two grams colliding on `hi` do not
+    * collide on `lo` — the detector's bucket-match-is-the-decision
+    * contract survives the 10^13–10^14 anchor instances of a 10^12-doc
+    * corpus, where 64-bit keys cross the birthday bound (same width
+    * rationale as [[graft.Fp]]). Residual risk is only via two distinct
+    * TOKENS colliding at 64 bits inside an otherwise-identical
+    * (q-1)-token context — vanishingly unlikely. */
   def substringAnchors128(text: String, q: Int, sample: Int): Array[Long] =
     substringAnchors128FromTokens(tokenHashes(text), q, sample)
 
   /** Same as [[substringAnchors128]] but over an already-tokenized hash
-    * stream — lets the three-detector fused kernel ([[fusedSig3]])
-    * tokenize once for signatures AND anchors. */
+    * stream — lets the signature kernel (`graft_doc_sig`) tokenize once
+    * for signatures AND anchors. */
   def substringAnchors128FromTokens(th: Array[Long], q: Int, sample: Int): Array[Long] = {
+    // mask-based "≡ 0 mod sample" requires a power of two — any other
+    // value silently changes the sampling rate (DedupConfig enforces
+    // this too; re-checked here for direct callers)
     require(Integer.bitCount(sample) == 1, s"sample must be a power of two, got $sample")
     if (th.length < q) return Array.empty
     val buf = new Array[Long](2 * (th.length - q + 1))

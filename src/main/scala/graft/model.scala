@@ -93,7 +93,6 @@ final case class DedupConfig(
     bands: Int = 32,
     rowsPerBand: Int = 4,
     jaccardThreshold: Double = 0.7,
-    simhashBits: Int = 64,
     simhashBlocks: Int = 4,
     /** feature granularity for simhash: k-token shingles. k=2 keeps the
       * fuzzy-edit Hamming displacement small relative to unrelated-doc
@@ -145,7 +144,6 @@ final case class DedupConfig(
   // minhash kernel bins by the top lg(numHashes) hash bits
   require(Integer.bitCount(numHashes) == 1,
     "numHashes must be a power of two (OPH minhash bins)")
-  require(simhashBits == 64, "SimHash is fixed at 64 bits")
   // anchor sampling implements "hash ≡ 0 mod sample" as a mask — only
   // correct for powers of two; reject configs that would silently
   // change the (1-1/s)^(L-q+1) miss-probability bound

@@ -165,7 +165,7 @@ object EmbeddingSim {
 
   /** Per-bucket cap WITHOUT a window, for input ALREADY hash-partitioned
     * on `bucket`: sort within partitions, stream-count each bucket in a
-    * single pass (the MinHashLSH.candidatePairs shape — a row_number
+    * single pass (the PairSweep shape — a row_number
     * window would sort a mega-bucket in ONE task; here a hot bucket
     * costs a linear scan inside an ordinary shuffle partition and the
     * cap is deterministic, first `cap` ids). Taking pre-partitioned

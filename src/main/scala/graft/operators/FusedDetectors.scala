@@ -1,36 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{DedupConfig, Doc, DupPair}
 
-/** MinHash-LSH + SimHash (+ optionally the exact long-substring
-  * detector) in ONE sweep over the corpus.
+/** The detector spine: the ONE implementation of near-dup detection.
+  * MinHash-LSH, SimHash and the exact long-substring detector are a
+  * bit mask over one sweep — [[MinHashLSH]], [[SimHashDetector]] and
+  * [[SubstringDetector]] are single-detector calls of it (mask 1, 2,
+  * 4), the pipeline's pairs stage runs all three (mask 7).
   *
-  * Run standalone, each detector pays (a) its own normalize+tokenize
-  * walk over every byte of every document and (b) its own key exchange
-  * (bands×, 68× and anchors-per-doc fan-outs shuffled separately).
-  * Fused:
+  * One sweep, whatever the mask:
   *
-  *  - ONE narrow projection computes every detector's per-doc input
-  *    ([[graft.plans.FusedSigExpr]] / [[graft.plans.FusedSig3Expr]] —
-  *    tokenizes once, bit-identical signatures AND anchors);
-  *  - ONE exchange carries every detector's candidate keys, tagged in
-  *    the sweep's k3 column so bucket spaces are STRUCTURALLY disjoint
-  *    (bucket identity = (k1, k2, k3); the shared [[PairSweep]] keeps
-  *    per-bucket caps and deterministic hubs);
-  *  - per-detector verification is unchanged (signature Jaccard for
-  *    minhash, `bit_count(a^b) <= r` for simhash, bucket-match-is-the-
-  *    decision for substring) and reads the same cached signature
-  *    table.
+  *  - ONE narrow projection computes every masked detector's per-doc
+  *    input ([[graft.plans.DocSigExpr]], `graft_doc_sig` — tokenizes
+  *    once; its struct carries only the masked fields);
+  *  - ONE exchange carries every masked detector's candidate keys,
+  *    tagged in the sweep's k3 column so bucket spaces are STRUCTURALLY
+  *    disjoint (bucket identity = (k1, k2, k3); the shared [[PairSweep]]
+  *    keeps per-bucket caps and deterministic hubs);
+  *  - per-detector verification (signature Jaccard for minhash,
+  *    `bit_count(a^b) <= r` for simhash, bucket-match-is-the-decision
+  *    for substring) reads the same cached signature table.
   *
-  * The output is row-identical to
-  * `MinHashLSH.dupPairs ∪ SimHashDetector.dupPairs`
-  * (∪ `SubstringDetector.dupPairs` with `withSubstring = true`) —
-  * FusedSpec asserts both; fusion changes the physical plan, not the
-  * semantics. The three-detector form is the production path for the
-  * pipeline's pairs stage (Pipeline/Bench); the standalone detectors
-  * remain the unit-testable / individually-oracled surfaces.
+  * A multi-detector sweep is row-identical to the union of the
+  * single-detector sweeps (DetectorSpec asserts it for masks 3 and 7):
+  * the tags keep the detectors' buckets, dedup and predicates apart.
   *
   * Reference analog: the reference's dedup pass also computes its
   * chunk fingerprint and its index probe in the same read of the data
@@ -38,6 +33,11 @@ import graft.{DedupConfig, Doc, DupPair}
   * structure.
   */
 object FusedDetectors {
+
+  /** Detector mask bits. */
+  val MinHash = 1
+  val SimHash = 2
+  val Substring = 4
 
   // detector tags ride the sweep's k3 column; k2 carries the low half
   // of the 128-bit anchor key for substring rows and 0 for the others
@@ -49,204 +49,190 @@ object FusedDetectors {
     * single-sourced so the two can never silently diverge. */
   val DefaultSlack = 0.05
 
+  private def has(mask: Int, d: Int): Boolean = (mask & d) != 0
+
+  /** The `graft_doc_sig` struct of `text` for `mask` (fields mh, sh, an
+    * — only the masked ones). */
+  private[graft] def docSig(text: Column, cfg: DedupConfig, mask: Int): Column =
+    call_function("graft_doc_sig", text, lit(mask),
+      lit(cfg.shingleK), lit(cfg.numHashes), lit(cfg.seed),
+      lit(cfg.simhashShingleK), lit(cfg.substrQ), lit(cfg.substrSample))
+
   /** Tagged candidate key stream from a [[signatures]]-shaped frame
-    * (sig, simhash [, anchors] + the `carry` columns — conv_id always;
-    * is_new for the incremental path). Tags in k3 keep the detectors'
-    * bucket spaces disjoint inside one exchange; when the frame carries
-    * an `anchors` column (the [[signatures3]] shape) the substring
-    * detector's 128-bit keys join the same stream as (hi, lo, tag).
+    * (the `mask`'s columns of sig, simhash, anchors + the `carry`
+    * columns — conv_id always; is_new for the incremental path). Tags
+    * in k3 keep the detectors' bucket spaces disjoint inside one
+    * exchange; substring keys are the 128-bit anchors as (hi, lo, tag).
     *
     * ONE scan of the signature frame: every detector's keys are built
     * as per-row struct arrays, concatenated and exploded by a single
-    * generator. The previous shape — a 2-/3-way unionAll of one
-    * projection per detector — read the (cached, corpus-sized)
-    * signature table once PER DETECTOR: 3× the cache scan volume and 3×
-    * the map tasks feeding the sweep exchange, each paying its own
-    * shuffle-file create/commit (measured as the sweep's dominant cost
-    * at sf0.1, and a 3×-scan tax at any scale). Same row multiset —
-    * the sweep's exchange+sort makes downstream order-insensitive. */
+    * generator. A unionAll of one projection per detector would read
+    * the (cached, corpus-sized) signature table once PER DETECTOR: 3×
+    * the cache scan volume and 3× the map tasks feeding the sweep
+    * exchange, each paying its own shuffle-file create/commit (measured
+    * as the sweep's dominant cost at sf0.1). */
   private[operators] def taggedKeys(sigs: DataFrame, cfg: DedupConfig,
-      carry: Seq[String]): DataFrame = {
+      carry: Seq[String], mask: Int): DataFrame = {
     val cc = carry.map(col).toList
-    def tag(k1: org.apache.spark.sql.Column, k2: org.apache.spark.sql.Column, k3: Long) =
+    def tag(k1: Column, k2: Column, k3: Long) =
       struct(k1.as("k1"), k2.as("k2"), lit(k3).as("k3"))
-    val mhArr = transform(
-      call_function("graft_band_hashes", col("sig"), lit(cfg.bands), lit(cfg.rowsPerBand)),
-      k => tag(k, lit(0L), MinHashTag))
-    val shArr = transform(
-      call_function("graft_ball_keys", col("simhash"), lit(cfg.simhashBlocks)),
-      k => tag(k, lit(0L), SimHashTag))
-    val all =
-      if (!sigs.columns.contains("anchors")) concat(mhArr, shArr)
-      else concat(mhArr, shArr,
-        transform(col("anchors"), a => tag(a.getField("hi"), a.getField("lo"), SubstrTag)))
-    sigs.select(explode(all).as("k") :: cc: _*)
+    val arrs =
+      (if (has(mask, MinHash)) Seq(transform(
+        call_function("graft_band_hashes", col("sig"), lit(cfg.bands), lit(cfg.rowsPerBand)),
+        k => tag(k, lit(0L), MinHashTag))) else Nil) ++
+      (if (has(mask, SimHash)) Seq(transform(
+        call_function("graft_ball_keys", col("simhash"), lit(cfg.simhashBlocks)),
+        k => tag(k, lit(0L), SimHashTag))) else Nil) ++
+      (if (has(mask, Substring)) Seq(transform(col("anchors"),
+        a => tag(a.getField("hi"), a.getField("lo"), SubstrTag))) else Nil)
+    sigs.select(explode(concat(arrs: _*)).as("k") :: cc: _*)
       .select(col("k.k1").as("k1") :: col("k.k2").as("k2") :: col("k.k3").as("k3") :: cc: _*)
   }
 
   /** Per-detector verification of a tagged candidate set against the
     * signature frame: signature Jaccard for minhash, Hamming radius
     * for simhash — THE verification both the batch and incremental
-    * paths run, by construction the same. Substring candidates
-    * (k3 = SubstrTag, if present) are NOT verified — their bucket match
-    * IS the decision ([[SubstringDetector]]) — but they RIDE the same
-    * pass (the sig attachments are inner joins on ids that exist in the
-    * signature table by construction, so they preserve every row) and
-    * exit tagged `substring`/1.0: the whole verified pair set is ONE
-    * linear pipeline over the candidates, no per-detector branch. */
+    * paths run. Substring candidates are NOT verified — their bucket
+    * match IS the decision ([[SubstringDetector]]) — so they are the
+    * fall-through of every per-tag choice and exit `substring`/1.0.
+    *
+    * ONE streaming pass over the candidate set: per-detector predicate
+    * and score are selected by the k3 tag inside a single projection
+    * (one filter+join branch per detector would run the shared join
+    * subtree once per branch). The signature attachments are
+    * CONDITIONAL left joins (match only for the tags that verify):
+    * substring candidates ride the same pass but pick up NULL instead
+    * of the ~1 KB signature payload. For minhash/simhash rows the left
+    * joins are inner-equivalent — every candidate id has exactly one
+    * signature row by construction. A substring-only mask attaches no
+    * signatures at all. */
   private[operators] def verifyPairs(cands: DataFrame, sigs: DataFrame,
-      cfg: DedupConfig, slack: Double): DataFrame = {
-    // filter to the near-dup tags BEFORE the signature joins: substring
-    // candidates would otherwise ride two corpus-sized joins only to be
-    // dropped by the per-detector tag filters
-    // ONE streaming pass over the candidate set: per-detector predicate
-    // and score selected by the k3 tag inside a single projection,
-    // instead of one filter+join branch per detector (which executed
-    // the shared join subtree once per branch — the broadcasts were
-    // reused but the probe-side stream over the candidates ran twice).
-    // Expressions are kept IDENTICAL per tag (same jaccard call, same
-    // 1 - hd/64 arithmetic), so the row multiset matches the old
-    // per-branch union exactly.
-    //
-    // The sig attachments are CONDITIONAL left joins (match only for
-    // the tags that verify): substring candidates ride the same pass
-    // but pick up NULL instead of the ~1 KB signature payload, so a
-    // substring-heavy corpus never ships minhash signatures through the
-    // doc_b exchange for rows whose decision is already made. For
-    // mh/sh rows the left joins are inner-equivalent — every candidate
-    // id has exactly one signature row by construction.
+      cfg: DedupConfig, slack: Double, mask: Int): DataFrame = {
+    val (mh, sh) = (has(mask, MinHash), has(mask, SimHash))
+    if (!mh && !sh)
+      return cands.select(col("doc_a"), col("doc_b"),
+        lit("substring").as("detector"), lit(1.0).as("score"))
     val isMh = col("k3") === MinHashTag
     val isSh = col("k3") === SimHashTag
-    val needsSig = isMh || isSh
-    val sigsA = sigs.select(col("conv_id").as("sa_id"),
-      col("sig").as("sig_a"), col("simhash").as("sh_a"))
-    val sigsB = sigs.select(col("conv_id").as("sb_id"),
-      col("sig").as("sig_b"), col("simhash").as("sh_b"))
+    // one when-chain over the verified tags; substring falls through
+    def byTag(onMh: Column, onSh: Column, substring: Column): Column = {
+      val arms = (if (mh) Seq(isMh -> onMh) else Nil) ++ (if (sh) Seq(isSh -> onSh) else Nil)
+      arms.tail.foldLeft(when(arms.head._1, arms.head._2)) { case (c, (t, v)) => c.when(t, v) }
+        .otherwise(substring)
+    }
+    val needsSig = if (mh && sh) isMh || isSh else if (mh) isMh else isSh
+    def side(s: String) = sigs.select(col("conv_id").as(s"s${s}_id") +:
+      ((if (mh) Seq(col("sig").as(s"sig_$s")) else Nil) ++
+        (if (sh) Seq(col("simhash").as(s"sh_$s")) else Nil)): _*)
     val withSigs = cands
-      .join(sigsA, col("doc_a") === col("sa_id") && needsSig, "left")
-      .join(sigsB, col("doc_b") === col("sb_id") && needsSig, "left")
+      .join(side("a"), col("doc_a") === col("sa_id") && needsSig, "left")
+      .join(side("b"), col("doc_b") === col("sb_id") && needsSig, "left")
       .drop("sa_id", "sb_id")
-    withSigs
-      .withColumn("score",
-        when(isMh, call_function("graft_sig_jaccard", col("sig_a"), col("sig_b"))))
-      .withColumn("hd", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(
-        when(isMh, col("score") >= lit(cfg.jaccardThreshold - slack))
-          .when(isSh, col("hd") <= lit(cfg.hammingRadius))
-          .otherwise(lit(true)))
+    val scored = if (!mh) withSigs else withSigs.withColumn("score",
+      when(isMh, call_function("graft_sig_jaccard", col("sig_a"), col("sig_b"))))
+    val hd = col("hd")
+    (if (!sh) scored else scored.withColumn("hd", bit_count(col("sh_a").bitwiseXOR(col("sh_b")))))
+      .filter(byTag(col("score") >= lit(cfg.jaccardThreshold - slack),
+        hd <= lit(cfg.hammingRadius), lit(true)))
       .select(col("doc_a"), col("doc_b"),
-        when(isMh, lit("minhash")).when(isSh, lit("simhash"))
-          .otherwise(lit("substring")).as("detector"),
-        when(isMh, col("score"))
-          .when(isSh, lit(1.0) - col("hd").cast("double") / lit(64.0))
-          .otherwise(lit(1.0)).as("score"))
+        byTag(lit("minhash"), lit("simhash"), lit("substring")).as("detector"),
+        byTag(col("score"), lit(1.0) - hd.cast("double") / lit(64.0), lit(1.0)).as("score"))
   }
 
-  /** (conv_id, sig: array<bigint>, simhash: bigint) — one tokenization
-    * pass per doc, signatures bit-identical to the standalone kernels. */
-  def signatures(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): DataFrame = {
+  /** (conv_id, sig: array<bigint>, simhash: bigint,
+    * anchors: array<struct<hi,lo>>) — the columns of the detectors in
+    * `mask` only, from one tokenization pass per doc. */
+  def signatures(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig,
+      mask: Int = MinHash | SimHash): DataFrame = {
     import spark.implicits._
     graft.plans.GraftFunctions.register(spark)
-    docs.toDF.select(
-      $"conv_id",
-      call_function("graft_fused_sig", $"doc_text",
-        lit(cfg.shingleK), lit(cfg.numHashes), lit(cfg.seed),
-        lit(cfg.simhashShingleK)).as("s"))
-      .select($"conv_id", $"s.mh".as("sig"), $"s.sh".as("simhash"))
+    val fields = Seq((MinHash, "mh", "sig"), (SimHash, "sh", "simhash"), (Substring, "an", "anchors"))
+      .collect { case (d, f, c) if has(mask, d) => col(s"s.$f").as(c) }
+    docs.toDF.select($"conv_id", docSig($"doc_text", cfg, mask).as("s"))
+      .select($"conv_id" +: fields: _*)
   }
 
-  /** (conv_id, sig, simhash, anchors: array<struct<hi,lo>>) — ALL THREE
-    * detectors' per-doc inputs from one tokenization pass, bit-identical
-    * to the standalone kernels ([[graft.plans.FusedSig3Expr]]). */
-  def signatures3(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): DataFrame = {
-    import spark.implicits._
+  /** The sweep's verified pair frame BEFORE it is checkpointed, and the
+    * materialized signature cache it reads (the caller unpersists it
+    * once the frame is materialized). [[sweep]] checkpoints it; plan
+    * inspection (PlanSpec, PlanDump) reads it here, because the
+    * checkpoint's scan hides the sweep. */
+  private[graft] def verifiedFrame(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig,
+      mask: Int, slack: Double): (DataFrame, DataFrame) = {
     graft.plans.GraftFunctions.register(spark)
-    docs.toDF.select(
-      $"conv_id",
-      call_function("graft_fused_sig3", $"doc_text",
-        lit(cfg.shingleK), lit(cfg.numHashes), lit(cfg.seed),
-        lit(cfg.simhashShingleK), lit(cfg.substrQ), lit(cfg.substrSample)).as("s"))
-      .select($"conv_id", $"s.mh".as("sig"), $"s.sh".as("simhash"), $"s.an".as("anchors"))
-  }
-
-  /** The fused detectors' verified dup pairs from one corpus sweep —
-    * minhash + simhash, and with `withSubstring = true` also the exact
-    * long-substring detector (one tokenization, one exchange for all
-    * three; row-identical to the standalone detectors' union either
-    * way).
-    *
-    * LIFETIME CONTRACT: the returned Dataset is a localCheckpoint whose
-    * blocks are retired by the NEXT `dupPairs` call on the same
-    * SparkSession (lineage is truncated, so a stale handle fails with
-    * block-not-found rather than recomputing). Valid until that next
-    * call; `persist()` or write it first if you need to hold two
-    * results. Same contract as [[ConnectedComponents]] labels and
-    * [[SuffixArrayDetector.dupPairs]]. */
-  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig,
-      slack: Double = DefaultSlack, withSubstring: Boolean = false): Dataset[DupPair] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    // cache() alone is NOT enough here: the signature table feeds four
-    // plan branches (the key streams + two verification join sides),
-    // and AQE materializes leaf exchanges CONCURRENTLY — before any
-    // cached block lands, every concurrent branch computes the full
+    // cache() alone is NOT enough here: the signature table feeds up to
+    // three plan branches (the key stream + two verification join
+    // sides), and AQE materializes leaf exchanges CONCURRENTLY — before
+    // any cached block lands, every concurrent branch computes the full
     // signature pipeline independently (measured: the sig stage ran
     // twice at sf0.1, doubling the query's CPU). One eager count() runs
     // it exactly once; every branch then reads cache.
-    val sigs0 =
-      (if (withSubstring) signatures3(spark, docs, cfg)
-       else signatures(spark, docs, cfg)).cache()
+    val sigs0 = signatures(spark, docs, cfg, mask).cache()
     // the materializing job doubles as the key-volume measurement for
     // the sweep's exchange width: minhash contributes `bands` keys/doc,
     // simhash `blocks × 17` (each 16-bit block + its 16 one-bit flips),
-    // substring `size(anchors)`. The measurement rides the cache-fill
-    // count as an observe() metric — exactly one pass over the
-    // signature table (a separate agg action re-scanned the cache in a
-    // second 128-task stage, measured in the stage profile).
-    val (nDocs, anchorKeys) =
-      if (!withSubstring) (sigs0.count(), 0L)
+    // substring `size(anchors)` — counted exactly, as an observe()
+    // metric on the cache-fill count (one pass over the table).
+    val perDoc = (if (has(mask, MinHash)) cfg.bands.toLong else 0L) +
+      (if (has(mask, SimHash)) cfg.simhashBlocks * 17L else 0L)
+    val nKeys =
+      if (!has(mask, Substring)) sigs0.count() * perDoc
       else {
         val obs = org.apache.spark.sql.Observation()
         val n = sigs0.observe(obs,
           coalesce(sum(size(col("anchors"))), lit(0L)).as("anchor_keys")).count()
-        (n, obs.get("anchor_keys").asInstanceOf[Long])
+        n * perDoc + obs.get("anchor_keys").asInstanceOf[Long]
       }
-    val nKeys = nDocs * (cfg.bands + cfg.simhashBlocks * 17L) + anchorKeys
     // plan boundary over the materialized cache: the consumer branches
     // below embed `sigs`' logical tree, and AQE's concurrent leaf
     // materialization can plan a branch against the not-yet-registered
     // cache entry and re-execute the signature kernel. The boundary
-    // pins every consumer to the ONE compiled cache-scan RDD —
-    // recomputation becomes structurally impossible, not just unlikely.
+    // pins every consumer to the ONE compiled cache-scan RDD.
     val sigs = org.apache.spark.sql.GraftPlanBridge.planBoundary(sigs0.toDF)
 
-    // tagged key stream: (k1, k2, k3 = detector tag). Pair identity is
-    // (doc_a, doc_b, detector): dedup on k3 — for substring that also
-    // collapses the per-shared-anchor multiplicity (k2 = anchor lo)
-    // exactly like the standalone detector's dropDuplicates. The
-    // candidate set is NOT cached: since verification became one linear
-    // pass (substring candidates ride it too), the sweep has exactly
-    // ONE consumer, so the whole sweep → verify → checkpoint chain runs
-    // as a single job — two fewer driver round-trips than the old
-    // cache + count + per-branch-union shape, and no duplicate-compute
-    // exposure because the plan references the sweep exactly once.
-    val cands = PairSweep.pairs(spark, taggedKeys(sigs, cfg, Seq("conv_id")), cfg.bucketCap,
-      keysEstimate = nKeys)
+    // pair identity is (doc_a, doc_b, detector): dedup on k3 — for
+    // substring that also collapses the per-shared-anchor multiplicity
+    // (k2 = anchor lo). The candidate set is NOT cached: verification
+    // is one linear pass, so the sweep has exactly ONE consumer and the
+    // whole sweep → verify → checkpoint chain runs as a single job.
+    val cands = PairSweep.pairs(spark, taggedKeys(sigs, cfg, Seq("conv_id"), mask),
+      cfg.bucketCap, keysEstimate = nKeys)
       .dropDuplicates("doc_a", "doc_b", "k3")
+    (verifyPairs(cands, sigs, cfg, slack, mask), sigs0)
+  }
 
-    // verification attaches the one cached signature table per side;
-    // per-detector predicates keep fused recall/precision equal to the
-    // standalone detectors' exactly. The result (pairs — tiny) is
-    // materialized so the corpus-sized signature cache can be freed
-    // HERE instead of leaking for the session's lifetime (a bench run
-    // invokes this per pass; a long-lived ingest session many times).
-    // Checkpointed blocks are untracked by the cache manager — retire
-    // the previous invocation's output (same contract as CC labels:
-    // valid until the next dupPairs on the SAME session; persist/write
-    // first to hold two results).
-    val out = verifyPairs(cands, sigs, cfg, slack).as[DupPair].localCheckpoint(true)
+  /** The verified dup pairs of the detectors in `mask` from one corpus
+    * sweep. The result (pairs — tiny) is materialized so the
+    * corpus-sized signature cache is freed HERE instead of leaking for
+    * the session's lifetime (a bench run invokes this per pass; a
+    * long-lived ingest session many times).
+    *
+    * LIFETIME CONTRACT: the returned Dataset is a localCheckpoint whose
+    * blocks are retired by the NEXT sweep with the SAME mask on the
+    * same SparkSession (lineage is truncated, so a stale handle fails
+    * with block-not-found rather than recomputing). Sweeps with
+    * different masks do not retire each other's results. `persist()` or
+    * write it first to hold two results of one mask. */
+  private[graft] def sweep(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig,
+      mask: Int, slack: Double): Dataset[DupPair] = {
+    import spark.implicits._
+    val (verified, sigs0) = verifiedFrame(spark, docs, cfg, mask, slack)
+    val out = verified.as[DupPair].localCheckpoint(true)
     sigs0.unpersist(false)
-    Retire.swap(spark, "fused_pairs", out.toDF)
+    Retire.swap(spark, s"detect_$mask", out.toDF)
     out
   }
+
+  /** MinHash + SimHash verified dup pairs from one corpus sweep (mask
+    * 3), and with `withSubstring = true` also the exact long-substring
+    * detector (mask 7): one tokenization, one exchange for all of them.
+    *
+    * LIFETIME CONTRACT: a localCheckpoint valid until the next call
+    * with the same detector set on the same SparkSession (see
+    * [[sweep]]); calls with the other detector set, or of the
+    * single-detector wrappers, do not retire it. Same contract as
+    * [[ConnectedComponents]] labels and [[SuffixArrayDetector.dupPairs]]. */
+  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig,
+      slack: Double = DefaultSlack, withSubstring: Boolean = false): Dataset[DupPair] =
+    sweep(spark, docs, cfg, MinHash | SimHash | (if (withSubstring) Substring else 0), slack)
 }

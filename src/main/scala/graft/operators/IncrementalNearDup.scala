@@ -51,6 +51,9 @@ import graft.{ClusterAssign, DedupConfig, Doc, DupPair}
   */
 object IncrementalNearDup {
 
+  /** The detectors an increment re-derives: MinHash + SimHash. */
+  private val NearDupMask = FusedDetectors.MinHash | FusedDetectors.SimHash
+
   /** (conv_id, ts_min, fp_h1, fp_h2, sig, simhash) — everything future
     * increments need from this batch, in one sweep over its text. */
   def signatureTable(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): DataFrame = {
@@ -60,9 +63,7 @@ object IncrementalNearDup {
       $"conv_id",
       $"ts_min",
       ExactDedup.fp($"doc_text").as("fp"),
-      call_function("graft_fused_sig", $"doc_text",
-        lit(cfg.shingleK), lit(cfg.numHashes), lit(cfg.seed),
-        lit(cfg.simhashShingleK)).as("s"))
+      FusedDetectors.docSig($"doc_text", cfg, NearDupMask).as("s"))
       .select($"conv_id", $"ts_min",
         $"fp.h1".as("fp_h1"), $"fp.h2".as("fp_h2"),
         $"s.mh".as("sig"), $"s.sh".as("simhash"))
@@ -101,11 +102,11 @@ object IncrementalNearDup {
     // verification (FusedDetectors.taggedKeys / verifyPairs — shared
     // code, not a synchronized copy), incremental emission in between
     val cands = PairSweep.pairsIncremental(spark,
-      FusedDetectors.taggedKeys(all, cfg, Seq("conv_id", "is_new")), cfg.bucketCap)
+      FusedDetectors.taggedKeys(all, cfg, Seq("conv_id", "is_new"), NearDupMask), cfg.bucketCap)
       .dropDuplicates("doc_a", "doc_b", "k3")
       .cache()
     cands.count()
-    val out = exact.unionAll(FusedDetectors.verifyPairs(cands, all, cfg, slack))
+    val out = exact.unionAll(FusedDetectors.verifyPairs(cands, all, cfg, slack, NearDupMask))
       .as[DupPair]
       .localCheckpoint(true)
     // an ingest loop calls this once per batch on a long-lived session:

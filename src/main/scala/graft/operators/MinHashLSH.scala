@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.{DedupConfig, Doc, DupPair}
-import graft.functions.Hashing
 
 /** MinHash + LSH near-duplicate detection (Broder '97 resemblance /
   * banding per Leskovec-Rajaraman-Ullman, "Mining of Massive Datasets"
@@ -18,102 +16,29 @@ import graft.functions.Hashing
   *  - Signatures are a NARROW map over docs (no shuffle): the signature
   *    is a pure function of doc_text.
   *  - Banding is a flatMap (bands× fan-out, still narrow).
-  *  - The only wide operations: one groupBy(band_key) for candidate
+  *  - The only wide operations: one exchange on band key for candidate
   *    generation and the joins that attach signatures for verification.
   *  - Skew (north_rule): buckets larger than cfg.bucketCap emit STAR
   *    edges (each member → bucket hub) instead of all pairs — linear,
   *    preserves connected-component connectivity, avoids the quadratic
   *    blowup of a mega-template bucket. All-pair emission only below the
   *    cap, where it buys recall for the pairwise-verify step.
+  *  - Verification: signature-estimated Jaccard (unbiased,
+  *    σ ≈ sqrt(J(1-J)/numHashes) ≈ 0.04 at 128 hashes) against
+  *    `jaccardThreshold - slack`; the slack keeps estimator noise from
+  *    dropping true pairs at the boundary (recall-first).
+  *
+  * The detector is the MinHash-only call (mask 1) of the
+  * [[FusedDetectors]] spine.
   */
 object MinHashLSH {
 
-  final case class Sig(conv_id: String, sig: Array[Long])
-  final case class BandKey(band_key: Long, conv_id: String)
-
-  /** Per-doc MinHash signatures — a narrow projection through the
-    * native [[graft.plans.MinHashSigExpr]] expression: stays inside
-    * whole-stage codegen, no encoder round-trip. */
-  def signatures(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[Sig] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    docs.toDF.select(
-      $"conv_id",
-      call_function("graft_minhash_sig", $"doc_text",
-        lit(cfg.shingleK), lit(cfg.numHashes), lit(cfg.seed)).as("sig"))
-      .as[Sig]
-  }
-
-  /** (band_key, conv_id) rows: `bands` rows per doc (codegen'd
-    * band-hash + explode — still narrow). */
-  def bandKeys(spark: SparkSession, sigs: Dataset[Sig], cfg: DedupConfig): Dataset[BandKey] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    sigs.toDF.select(
-      explode(call_function("graft_band_hashes", $"sig",
-        lit(cfg.bands), lit(cfg.rowsPerBand))).as("band_key"),
-      $"conv_id")
-      .as[BandKey]
-  }
-
-  /** Candidate pairs from shared band buckets; deduplicated across
-    * bands. Returned with doc_a < doc_b lexicographically.
+  /** docs → verified near-dup pairs (detector `minhash`, score = the
+    * estimated Jaccard).
     *
-    * Shape: ONE shuffle (repartition on band_key + in-partition sort by
-    * (band_key, conv_id)), then a streaming single pass. Because groups
-    * arrive sorted, the FIRST member of a bucket is its global-min
-    * conv_id — so every emitted row is a pure function of the bucket's
-    * full membership and task retries reproduce byte-identical output
-    * (no mixed-attempt edge loss downstream).
-    *
-    * Memory: the pass buffers at most cap+1 members; buckets that
-    * overflow the cap switch to streaming STAR edges around the
-    * deterministic hub (the sorted-first member) — linear in bucket
-    * size, so a mega-template bucket cannot go quadratic. */
-  def candidatePairs(spark: SparkSession, keys: Dataset[BandKey], cfg: DedupConfig,
-      keysEstimate: Long = -1L): DataFrame =
-    PairSweep.pairs(spark,
-      keys.toDF.select(col("band_key").as("k1"), lit(0L).as("k2"), lit(0L).as("k3"), col("conv_id")),
-      cfg.bucketCap, keysEstimate)
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-
-  /** Verify candidates against signature-estimated Jaccard (unbiased,
-    * σ ≈ sqrt(J(1-J)/numHashes) ≈ 0.04 at 128 hashes). `slack` lowers
-    * the accept threshold so estimator noise doesn't drop true pairs at
-    * the boundary (recall-first; precision is re-checked downstream by
-    * whoever consumes scores). */
-  def verifiedPairs(
-      spark: SparkSession,
-      candidates: DataFrame,
-      sigs: Dataset[Sig],
-      cfg: DedupConfig,
-      slack: Double = 0.05): Dataset[DupPair] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    val sigDf = sigs.toDF("conv_id", "sig")
-    candidates
-      .join(sigDf.withColumnRenamed("conv_id", "doc_a").withColumnRenamed("sig", "sig_a"), Seq("doc_a"))
-      .join(sigDf.withColumnRenamed("conv_id", "doc_b").withColumnRenamed("sig", "sig_b"), Seq("doc_b"))
-      .withColumn("score", call_function("graft_sig_jaccard", $"sig_a", $"sig_b"))
-      .filter($"score" >= lit(cfg.jaccardThreshold - slack))
-      .select($"doc_a", $"doc_b", lit("minhash").as("detector"), $"score")
-      .as[DupPair]
-  }
-
-  /** Full detector: docs → verified near-dup pairs. The signature
-    * cache is materialized EAGERLY: it feeds the band-key stream and
-    * both verification join sides, and AQE materializes those leaf
-    * exchanges concurrently — with a lazy cache each branch would
-    * recompute the full signature pipeline before any block lands
-    * (see FusedDetectors.dupPairs). */
-  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[DupPair] = {
-    val sigs = signatures(spark, docs, cfg).cache()
-    // the cache-filling count doubles as the sweep's exchange sizing:
-    // exactly `bands` band keys per doc
-    val n = sigs.count()
-    val cands = candidatePairs(spark, bandKeys(spark, sigs, cfg), cfg,
-      keysEstimate = n * cfg.bands)
-    verifiedPairs(spark, cands, sigs, cfg)
-  }
+    * LIFETIME CONTRACT: the result is a localCheckpoint valid until the
+    * next MinHash-only call on the same SparkSession; calls with other
+    * detector sets do not retire it. */
+  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[DupPair] =
+    FusedDetectors.sweep(spark, docs, cfg, FusedDetectors.MinHash, FusedDetectors.DefaultSlack)
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.{DedupConfig, Doc, DupPair}
 import graft.functions.Hashing
 
@@ -26,47 +25,18 @@ import graft.functions.Hashing
   * groupBy on block key with the same star-edge cap as the LSH bucket
   * path (hot block values — e.g. blocks of boilerplate-heavy docs —
   * would otherwise go quadratic).
+  *
+  * The detector is the SimHash-only call (mask 2) of the
+  * [[FusedDetectors]] spine.
   */
 object SimHashDetector {
 
-  final case class SimSig(conv_id: String, simhash: Long)
-
-  def signatures(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[SimSig] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    docs.toDF.select(
-      $"conv_id",
-      call_function("graft_simhash64", $"doc_text", lit(cfg.simhashShingleK)).as("simhash"))
-      .as[SimSig]
-  }
-
-  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[DupPair] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    // eager: the sig table feeds the key stream and both verification
-    // join sides; a lazy cache is recomputed per concurrent AQE branch
-    // (see FusedDetectors.dupPairs)
-    val sigs = signatures(spark, docs, cfg).cache()
-    // cache-filling count doubles as sweep sizing: 17 ball keys per
-    // 16-bit block (the block itself + its 16 one-bit flips)
-    val n = sigs.count()
-    val keys = sigs.toDF.select(
-      explode(call_function("graft_ball_keys", $"simhash", lit(cfg.simhashBlocks))).as("band_key"),
-      $"conv_id")
-      .as[MinHashLSH.BandKey]
-    val cands = MinHashLSH.candidatePairs(spark, keys, cfg,
-      keysEstimate = n * cfg.simhashBlocks * 17L)
-    val sigDf = sigs.toDF("conv_id", "simhash")
-    cands
-      .join(sigDf.withColumnRenamed("conv_id", "doc_a").withColumnRenamed("simhash", "sh_a"), Seq("doc_a"))
-      .join(sigDf.withColumnRenamed("conv_id", "doc_b").withColumnRenamed("simhash", "sh_b"), Seq("doc_b"))
-      .withColumn("hd", bit_count($"sh_a".bitwiseXOR($"sh_b")))
-      .filter($"hd" <= lit(cfg.hammingRadius))
-      .select(
-        $"doc_a",
-        $"doc_b",
-        lit("simhash").as("detector"),
-        (lit(1.0) - $"hd".cast("double") / lit(64.0)).as("score"))
-      .as[DupPair]
-  }
+  /** docs → verified fuzzy pairs (detector `simhash`, score =
+    * 1 - HD/64).
+    *
+    * LIFETIME CONTRACT: the result is a localCheckpoint valid until the
+    * next SimHash-only call on the same SparkSession; calls with other
+    * detector sets do not retire it. */
+  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[DupPair] =
+    FusedDetectors.sweep(spark, docs, cfg, FusedDetectors.SimHash, FusedDetectors.DefaultSlack)
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   *
   * Three layers in this engine:
   *  1. LSH/block/anchor buckets — capped star edges
-  *     ([[MinHashLSH.candidatePairs]]): structural, changes candidate
+  *     ([[PairSweep]]): structural, changes candidate
   *     generation from quadratic to linear on hot buckets.
   *  2. AQE skew-join splitting — on by default in every session.
   *  3. This utility — classic replicate-and-salt for a hot-key

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.{DedupConfig, Doc, DupPair}
 import graft.functions.Hashing
 
@@ -32,55 +31,23 @@ import graft.functions.Hashing
   * decision as /root/reference/src/dedup.c:129-147.
   *
   * Scale: anchor extraction is a narrow flatMap; candidate generation
-  * mirrors [[MinHashLSH.candidatePairs]] — ONE pinned exchange on the
-  * key, in-partition sort, streaming single pass with the same
+  * is the shared [[PairSweep]] — ONE pinned exchange on the key,
+  * in-partition sort, streaming single pass with the same
   * deterministic-hub star fallback above cfg.bucketCap (boilerplate
   * blocks shared by millions of docs → linear star edges, not n²).
+  *
+  * The detector is the substring-only call (mask 4) of the
+  * [[FusedDetectors]] spine: no signature is computed or joined, and
+  * the sweep's width comes from the exact anchor count.
   */
 object SubstringDetector {
 
-  final case class AnchorKey(k_hi: Long, k_lo: Long, conv_id: String)
-
-  /** (k_hi, k_lo, conv_id) anchor rows — narrow codegen'd flatMap. */
-  def anchorKeys(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[AnchorKey] = {
-    import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
-    docs.toDF.select(
-      explode(call_function("graft_substr_anchors128", $"doc_text",
-        lit(cfg.substrQ), lit(cfg.substrSample))).as("a"),
-      $"conv_id")
-      .select($"a.hi".as("k_hi"), $"a.lo".as("k_lo"), $"conv_id")
-      .as[AnchorKey]
-  }
-
-  /** Candidate pairs from shared 128-bit anchor buckets: the shared
-    * [[PairSweep]] with (k1, k2) = the two anchor halves (same
-    * guarantees — sorted groups make the hub the global bucket min,
-    * overflow buckets stream star edges, retries byte-deterministic). */
-  def candidatePairs(spark: SparkSession, keys: Dataset[AnchorKey], cfg: DedupConfig,
-      keysEstimate: Long = -1L): DataFrame =
-    PairSweep.pairs(spark,
-      keys.toDF.select(col("k_hi").as("k1"), col("k_lo").as("k2"), lit(0L).as("k3"), col("conv_id")),
-      cfg.bucketCap, keysEstimate)
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-
-  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[DupPair] = {
-    import spark.implicits._
-    // sweep-exchange sizing without an extra count job: winnowing keeps
-    // ~1 anchor per substrSample tokens and a token is ~6 text bytes,
-    // so anchors ≈ plan-stats bytes / (6 × sample). The estimate only
-    // sizes partitions (clamped to [1, session width]); being a few ×
-    // off shifts partition fill, never correctness.
-    val textBytes = docs.toDF
-      .asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    val est = (textBytes / (6L * cfg.substrSample)).min(BigInt(Long.MaxValue / 8)).toLong.max(1L)
-    candidatePairs(spark, anchorKeys(spark, docs, cfg), cfg, keysEstimate = est)
-      // constant columns via select+lit stays inside codegen — a typed
-      // .map here would pay a full encoder round-trip per pair
-      .select($"doc_a", $"doc_b",
-        lit("substring").as("detector"), lit(1.0).as("score"))
-      .as[DupPair]
-  }
+  /** docs → pairs sharing a winnowed 128-bit anchor (detector
+    * `substring`, score 1.0).
+    *
+    * LIFETIME CONTRACT: the result is a localCheckpoint valid until the
+    * next substring-only call on the same SparkSession; calls with
+    * other detector sets do not retire it. */
+  def dupPairs(spark: SparkSession, docs: Dataset[Doc], cfg: DedupConfig): Dataset[DupPair] =
+    FusedDetectors.sweep(spark, docs, cfg, FusedDetectors.Substring, FusedDetectors.DefaultSlack)
 }

@@ -22,14 +22,51 @@ import graft.functions.Hashing
   * via `spark.sql.extensions=graft.plans.GraftExtensions`), callable
   * from SQL and from `call_function` — the (c) tier of the custom-op
   * preference order in the build brief.
+  *
+  * The kernels, by consumer:
+  *  - `graft_doc_sig(text, mask, k1, numHashes, seed, k2, q, sample)` —
+  *    the one signature kernel: MinHash / SimHash / substring anchors
+  *    for the detector mask (FusedDetectors, IncrementalNearDup,
+  *    StreamingNearDup);
+  *  - `graft_band_hashes`, `graft_ball_keys` — MinHash band and SimHash
+  *    Hamming-ball candidate keys; `graft_sig_jaccard` — MinHash verify;
+  *  - `graft_substr_anchors128`, `graft_gram_fps_pos` — gram keys for
+  *    Decontaminate and SpanDedup;
+  *  - `graft_doc_fp` — normalized-text fingerprint; `graft_prefix_chain`
+  *    — PrefixDedup; `graft_rhp_buckets` — EmbeddingSim ANN buckets;
+  *  - `graft_bloom_agg` — IncrementalDedup's filter build (its probe,
+  *    [[BloomContainsBroadcast]], is constructed directly, not registered).
   */
 object GraftKernels {
-  def minhashSig(text: UTF8String, k: Int, numHashes: Int, seed: Long): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      Hashing.minhashSignature(Hashing.shingleHashes(text.toString, k), numHashes, seed))
+  /** array<struct<hi,lo>>: the 128-bit substring-anchor layout. */
+  val AnchorsType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("hi", LongType, nullable = false),
+      StructField("lo", LongType, nullable = false))),
+    containsNull = false)
 
-  def simhash64(text: UTF8String, k: Int): Long =
-    Hashing.simhash(Hashing.shingleHashes(text.toString, k))
+  /** One document's detector inputs from ONE tokenization pass: a
+    * struct holding only the fields `mask` asks for, in mask-bit order —
+    * `mh` (1: MinHash signature over k1-shingles), `sh` (2: 64-bit
+    * SimHash over k2-shingles), `an` (4: 128-bit winnowed q-gram
+    * anchors, struct<hi,lo> rows). Each field is exactly the composed
+    * [[Hashing]] primitive over the text; the kernel only shares the
+    * normalize+tokenize walk, which at corpus scale is a full pass over
+    * every byte of every document. */
+  def docSig(text: UTF8String, mask: Int, k1: Int, numHashes: Int, seed: Long, k2: Int,
+      q: Int, sample: Int): org.apache.spark.sql.catalyst.InternalRow = {
+    val th = Hashing.tokenHashes(text.toString)
+    val out = new Array[Any](Integer.bitCount(mask))
+    var i = 0
+    if ((mask & 1) != 0) {
+      out(i) = UnsafeArrayData.fromPrimitiveArray(
+        Hashing.minhashSignature(Hashing.shingleHashesFromTokens(th, k1), numHashes, seed))
+      i += 1
+    }
+    if ((mask & 2) != 0) { out(i) = Hashing.simhash(Hashing.shingleHashesFromTokens(th, k2)); i += 1 }
+    if ((mask & 4) != 0) out(i) = structRows(Hashing.substringAnchors128FromTokens(th, q, sample), 2)
+    new GenericInternalRow(out)
+  }
 
   def bandHashes(sig: ArrayData, bands: Int, rowsPerBand: Int): ArrayData = {
     val arr = sig.toLongArray()
@@ -39,91 +76,41 @@ object GraftKernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** One-pass dual signature for the fused detector: struct<mh, sh>. */
-  def fusedSig(text: UTF8String, k1: Int, numHashes: Int, seed: Long, k2: Int): org.apache.spark.sql.catalyst.InternalRow = {
-    val (mh, sh) = Hashing.fusedSig(text.toString, k1, numHashes, seed, k2)
-    org.apache.spark.sql.catalyst.InternalRow(
-      UnsafeArrayData.fromPrimitiveArray(mh), sh)
-  }
-
-  /** One-pass triple signature for the three-detector fused sweep:
-    * struct<mh, sh, an> — anchors arrive interleaved from the kernel
-    * and are reshaped into struct rows here (same layout as
-    * [[substrAnchors128]]). */
-  def fusedSig3(text: UTF8String, k1: Int, numHashes: Int, seed: Long, k2: Int,
-      q: Int, sample: Int): org.apache.spark.sql.catalyst.InternalRow = {
-    val (mh, sh, flat) = Hashing.fusedSig3(text.toString, k1, numHashes, seed, k2, q, sample)
-    val n = flat.length / 2
-    val rows = new Array[Any](n)
+  /** Interleaved `width`-long groups [a0, b0, .., a1, b1, ..] →
+    * array<struct> of `width` long fields. */
+  private def structRows(flat: Array[Long], width: Int): ArrayData = {
+    val rows = new Array[Any](flat.length / width)
     var i = 0
-    while (i < n) {
-      rows(i) = org.apache.spark.sql.catalyst.InternalRow(flat(2 * i), flat(2 * i + 1))
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(
-      UnsafeArrayData.fromPrimitiveArray(mh), sh,
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(rows))
-  }
-
-  def substrAnchors(text: UTF8String, q: Int, sample: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(Hashing.substringAnchors(text.toString, q, sample))
-
-  /** 128-bit anchor keys as interleaved [hi0, lo0, hi1, lo1, ...] —
-    * [[SubstrAnchors128Expr]] reshapes them into struct rows. */
-  def substrAnchors128(text: UTF8String, q: Int, sample: Int): ArrayData = {
-    val flat = Hashing.substringAnchors128(text.toString, q, sample)
-    val n = flat.length / 2
-    val rows = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      rows(i) = org.apache.spark.sql.catalyst.InternalRow(flat(2 * i), flat(2 * i + 1))
+    while (i < rows.length) {
+      rows(i) = new GenericInternalRow(Array.tabulate[Any](width)(j => flat(width * i + j)))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
   }
 
-  /** Positional gram keys as interleaved [pos, hi, lo, ...] —
-    * [[GramFpsPosExpr]] reshapes them into struct rows. */
-  def gramFpsPos(text: UTF8String, q: Int): ArrayData = {
-    val flat = Hashing.gramFps128WithPos(text.toString, q)
-    val n = flat.length / 3
-    val rows = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      rows(i) = org.apache.spark.sql.catalyst.InternalRow(
-        flat(3 * i), flat(3 * i + 1), flat(3 * i + 2))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
-  }
+  /** 128-bit anchor keys as struct<hi,lo> rows. */
+  def substrAnchors128(text: UTF8String, q: Int, sample: Int): ArrayData =
+    structRows(Hashing.substringAnchors128(text.toString, q, sample), 2)
+
+  /** Positional gram keys as struct<pos, hi, lo> rows. */
+  def gramFpsPos(text: UTF8String, q: Int): ArrayData =
+    structRows(Hashing.gramFps128WithPos(text.toString, q), 3)
 
   def ballKeys(h: Long, blocks: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(Hashing.simhashBallKeys(h, blocks))
 
   /** Executor-wide cache of RHP plane matrices, keyed by
     * (dim, bits, tables, seed): planes are a pure function of the key
-    * (no stored model), so sharing across tasks is safe; the access-
-    * order LRU bounds memory if a session probes many configurations
-    * (each entry is tables × bits × dim doubles). */
-  private val planeCacheMax = 8
+    * (no stored model), so sharing across tasks is safe. Lock-free on a
+    * hit — every rhpBuckets row reads it. Unbounded: one entry per
+    * distinct configuration a session probes (each tables × bits × dim
+    * doubles), a handful in practice. */
   private val planeCache =
-    new java.util.LinkedHashMap[(Int, Int, Int, Long), Array[Array[Array[Double]]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(Int, Int, Int, Long), Array[Array[Array[Double]]]]): Boolean =
-        size() > planeCacheMax
-    }
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int, Long), Array[Array[Array[Double]]]]()
   private def planesFor(dim: Int, bits: Int, tables: Int, seed: Long): Array[Array[Array[Double]]] =
-    planeCache.synchronized {
-      val key = (dim, bits, tables, seed)
-      val hit = planeCache.get(key)
-      if (hit != null) hit
-      else {
-        val built = Array.tabulate(tables)(t =>
-          graft.operators.EmbeddingSim.rhpPlanes(dim, bits, Hashing.mix64(seed * 31 + t)))
-        planeCache.put(key, built)
-        built
-      }
-    }
+    planeCache.computeIfAbsent((dim, bits, tables, seed), _ =>
+      Array.tabulate(tables)(t =>
+        graft.operators.EmbeddingSim.rhpPlanes(dim, bits, Hashing.mix64(seed * 31 + t))))
 
   /** array<float> embedding → `tables` RHP bucket keys — bit-identical
     * to [[graft.operators.EmbeddingSim.bucketKeys]]'s per-row math
@@ -225,14 +212,18 @@ object GraftKernels {
   }
 }
 
+/** A kernel over one text column. */
+abstract class StringKernel extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
+}
+
 /** normalized-text → 64-bit content fingerprint (FNV+mix over the
   * whitespace-collapsed, case-folded text). Native so the text-analysis
   * path stays fully inside whole-stage codegen (its sibling kernels
   * already are). */
-case class DocFpExpr(child: Expression, seed: Long = 0L) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
+case class DocFpExpr(child: Expression, seed: Long = 0L) extends StringKernel {
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_doc_fp"
   override protected def nullSafeEval(input: Any): Any =
@@ -243,89 +234,26 @@ case class DocFpExpr(child: Expression, seed: Long = 0L) extends UnaryExpression
     copy(child = newChild)
 }
 
-/** text → Array[Long] MinHash signature. */
-case class MinHashSigExpr(child: Expression, k: Int, numHashes: Int, seed: Long)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    GraftKernels.minhashSig(input.asInstanceOf[UTF8String], k, numHashes, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.GraftKernels.minhashSig($c, $k, $numHashes, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
-}
-
-/** text → struct<mh: array<bigint>, sh: bigint> — BOTH near-dup
-  * signatures in one tokenization pass (bit-identical to
-  * [[MinHashSigExpr]] + [[SimHash64Expr]] run separately; see
-  * [[Hashing.fusedSig]]). The fused detector projects this once per
-  * doc instead of walking the text twice. */
-case class FusedSigExpr(child: Expression, k1: Int, numHashes: Int, seed: Long, k2: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("mh", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("sh", LongType, nullable = false)))
-  override def prettyName: String = "graft_fused_sig"
-  override protected def nullSafeEval(input: Any): Any =
-    GraftKernels.fusedSig(input.asInstanceOf[UTF8String], k1, numHashes, seed, k2)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.GraftKernels.fusedSig($c, $k1, $numHashes, ${seed}L, $k2)")
-  override protected def withNewChildInternal(newChild: Expression): FusedSigExpr =
-    copy(child = newChild)
-}
-
-/** text → struct<mh: array<bigint>, sh: bigint, an: array<struct<hi,lo>>>
-  * — ALL THREE detectors' per-doc inputs in one tokenization pass
-  * (bit-identical to [[FusedSigExpr]] + [[SubstrAnchors128Expr]] run
-  * separately; see [[Hashing.fusedSig3]]). The three-detector fused
-  * sweep projects this once per doc instead of walking the text twice
-  * (signatures pass + anchors pass). */
-case class FusedSig3Expr(child: Expression, k1: Int, numHashes: Int, seed: Long,
-    k2: Int, q: Int, sample: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
+/** text → struct of the detector inputs `mask` selects (1 = `mh`
+  * array<bigint>, 2 = `sh` bigint, 4 = `an` array<struct<hi,lo>>) —
+  * [[GraftKernels.docSig]]. The one signature kernel of the detector
+  * spine ([[graft.operators.FusedDetectors]]), the incremental
+  * signature table and the streaming detector. */
+case class DocSigExpr(child: Expression, mask: Int, k1: Int, numHashes: Int, seed: Long,
+    k2: Int, q: Int, sample: Int) extends StringKernel {
+  require(mask >= 1 && mask <= 7, s"detector mask must be in 1..7, got $mask")
   override def dataType: DataType = StructType(Seq(
     StructField("mh", ArrayType(LongType, containsNull = false), nullable = false),
     StructField("sh", LongType, nullable = false),
-    StructField("an", ArrayType(
-      StructType(Seq(
-        StructField("hi", LongType, nullable = false),
-        StructField("lo", LongType, nullable = false))),
-      containsNull = false), nullable = false)))
-  override def prettyName: String = "graft_fused_sig3"
+    StructField("an", GraftKernels.AnchorsType, nullable = false))
+    .zipWithIndex.collect { case (f, i) if (mask & (1 << i)) != 0 => f })
+  override def prettyName: String = "graft_doc_sig"
   override protected def nullSafeEval(input: Any): Any =
-    GraftKernels.fusedSig3(input.asInstanceOf[UTF8String], k1, numHashes, seed, k2, q, sample)
+    GraftKernels.docSig(input.asInstanceOf[UTF8String], mask, k1, numHashes, seed, k2, q, sample)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.plans.GraftKernels.fusedSig3($c, $k1, $numHashes, ${seed}L, $k2, $q, $sample)")
-  override protected def withNewChildInternal(newChild: Expression): FusedSig3Expr =
-    copy(child = newChild)
-}
-
-/** text → 64-bit SimHash over k-token shingles. */
-case class SimHash64Expr(child: Expression, k: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-  override protected def nullSafeEval(input: Any): Any =
-    GraftKernels.simhash64(input.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.GraftKernels.simhash64($c, $k)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
+      s"graft.plans.GraftKernels.docSig($c, $mask, $k1, $numHashes, ${seed}L, $k2, $q, $sample)")
+  override protected def withNewChildInternal(newChild: Expression): DocSigExpr =
     copy(child = newChild)
 }
 
@@ -347,38 +275,15 @@ case class BandHashesExpr(child: Expression, bands: Int, rowsPerBand: Int)
     copy(child = newChild)
 }
 
-/** text → winnowed anchor hashes of q-token grams. */
-case class SubstrAnchorsExpr(child: Expression, q: Int, sample: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_substr_anchors"
-  override protected def nullSafeEval(input: Any): Any =
-    GraftKernels.substrAnchors(input.asInstanceOf[UTF8String], q, sample)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.GraftKernels.substrAnchors($c, $q, $sample)")
-  override protected def withNewChildInternal(newChild: Expression): SubstrAnchorsExpr =
-    copy(child = newChild)
-}
-
-/** text → 128-bit winnowed anchor keys, array<struct<hi,lo>>. The
-  * 64-bit [[SubstrAnchorsExpr]] selects the same grams; this variant
-  * carries a second independently-initialized rolling hash so a bucket
-  * match implies a 128-bit key match — collision-safe at the 10^12-doc
-  * design point where 64-bit anchor instances cross the birthday bound. */
+/** text → 128-bit winnowed anchor keys, array<struct<hi,lo>> (the `an`
+  * field of [[DocSigExpr]], standalone for [[graft.operators.Decontaminate]]).
+  * Grams are selected by the 64-bit `hi` chain; `lo` is a second
+  * independently-initialized rolling hash so a bucket match implies a
+  * 128-bit key match — collision-safe at the 10^12-doc design point
+  * where 64-bit anchor instances cross the birthday bound. */
 case class SubstrAnchors128Expr(child: Expression, q: Int, sample: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(
-      StructField("hi", LongType, nullable = false),
-      StructField("lo", LongType, nullable = false))),
-    containsNull = false)
+    extends StringKernel {
+  override def dataType: DataType = GraftKernels.AnchorsType
   override def prettyName: String = "graft_substr_anchors128"
   override protected def nullSafeEval(input: Any): Any =
     GraftKernels.substrAnchors128(input.asInstanceOf[UTF8String], q, sample)
@@ -394,10 +299,7 @@ case class SubstrAnchors128Expr(child: Expression, q: Int, sample: Int)
   * derivation at sample = 1), for span-level consumers that must know
   * WHERE a gram sits, not just that it exists. */
 case class GramFpsPosExpr(child: Expression, q: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires StringType, got ${child.dataType}")
+    extends StringKernel {
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("pos", LongType, nullable = false),
@@ -544,7 +446,7 @@ case class BloomContainsBroadcast(
 
 /** Session registration of the graft_* functions. SQL arg forms take
   * the tunables as literal ints (foldable), e.g.
-  * `graft_minhash_sig(text, 5, 128, 42)`. */
+  * `graft_doc_sig(text, 3, 5, 128, 42, 2, 32, 8)`. */
 object GraftFunctions {
 
   private def litInt(e: Expression, what: String): Int = {
@@ -557,20 +459,11 @@ object GraftFunctions {
   }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_minhash_sig" -> (cs =>
-      MinHashSigExpr(cs.head, litInt(cs(1), "k"), litInt(cs(2), "numHashes"), litLong(cs(3), "seed"))),
-    "graft_simhash64" -> (cs => SimHash64Expr(cs.head, litInt(cs(1), "k"))),
+    "graft_doc_sig" -> (cs =>
+      DocSigExpr(cs.head, litInt(cs(1), "mask"), litInt(cs(2), "k1"), litInt(cs(3), "numHashes"),
+        litLong(cs(4), "seed"), litInt(cs(5), "k2"), litInt(cs(6), "q"), litInt(cs(7), "sample"))),
     "graft_band_hashes" -> (cs =>
       BandHashesExpr(cs.head, litInt(cs(1), "bands"), litInt(cs(2), "rowsPerBand"))),
-    "graft_fused_sig" -> (cs =>
-      FusedSigExpr(cs.head, litInt(cs(1), "k1"), litInt(cs(2), "numHashes"),
-        litLong(cs(3), "seed"), litInt(cs(4), "k2"))),
-    "graft_fused_sig3" -> (cs =>
-      FusedSig3Expr(cs.head, litInt(cs(1), "k1"), litInt(cs(2), "numHashes"),
-        litLong(cs(3), "seed"), litInt(cs(4), "k2"),
-        litInt(cs(5), "q"), litInt(cs(6), "sample"))),
-    "graft_substr_anchors" -> (cs =>
-      SubstrAnchorsExpr(cs.head, litInt(cs(1), "q"), litInt(cs(2), "sample"))),
     "graft_substr_anchors128" -> (cs =>
       SubstrAnchors128Expr(cs.head, litInt(cs(1), "q"), litInt(cs(2), "sample"))),
     "graft_gram_fps_pos" -> (cs => GramFpsPosExpr(cs.head, litInt(cs(1), "q"))),
@@ -583,13 +476,12 @@ object GraftFunctions {
     "graft_doc_fp" -> (cs =>
       if (cs.length >= 2) DocFpExpr(cs.head, litLong(cs(1), "seed"))
       else DocFpExpr(cs.head)),
-    // the internal bloom-filter aggregate/probe (Spark uses them for
-    // runtime join filters but does not expose SQL names in 4.1):
-    // graft_bloom_agg(longCol, expectedItems, numBits) → binary,
-    // graft_bloom_contains(bf, longCol) → boolean
+    // Spark's internal bloom-filter aggregate (used for runtime join
+    // filters, no SQL name in 4.1): graft_bloom_agg(longCol,
+    // expectedItems, numBits) → binary. Probes go through
+    // [[BloomContainsBroadcast]].
     "graft_bloom_agg" -> (cs =>
       new aggregate.BloomFilterAggregate(cs.head, cs(1), cs(2)).toAggregateExpression()),
-    "graft_bloom_contains" -> (cs => BloomFilterMightContain(cs.head, cs(1))),
   )
 
   /** Idempotent per-session registration: a function the session's

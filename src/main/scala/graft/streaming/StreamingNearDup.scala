@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.DedupConfig
+import graft.functions.Hashing
+import graft.operators.FusedDetectors
 
 /** Structured-Streaming MinHash near-duplicate detection — the
   * streaming form of [[graft.operators.MinHashLSH]] (the reference is
@@ -52,18 +54,6 @@ object StreamingNearDup {
   final case class StreamPair(doc_a: String, doc_b: String, detector: String,
       score: Double, ts: java.sql.Timestamp)
 
-  /** Unbiased signature Jaccard estimate — Scala twin of the
-    * `graft_sig_jaccard` expression (state-side compare can't call a
-    * Catalyst expression). */
-  private def sigJaccard(a: Array[Long], b: Array[Long]): Double = {
-    val n = math.min(a.length, b.length)
-    if (n == 0) return 0.0
-    var eq = 0
-    var i = 0
-    while (i < n) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / n
-  }
-
   /** docs stream (conv_id, doc_text, ts) → near-dup pair stream.
     * @param watermark how late a document may arrive and still be
     *        matched against its bucket; also the state horizon.
@@ -88,8 +78,8 @@ object StreamingNearDup {
     val threshold = cfg.jaccardThreshold - slack
     val cap = memberCap
     val keyed = docs
-      .withColumn("sig", call_function("graft_minhash_sig", $"doc_text",
-        lit(cfg.shingleK), lit(cfg.numHashes), lit(cfg.seed)))
+      .withColumn("sig", FusedDetectors.docSig($"doc_text", cfg, FusedDetectors.MinHash)
+        .getField("mh"))
       .select(
         explode(call_function("graft_band_hashes", $"sig",
           lit(cfg.bands), lit(cfg.rowsPerBand))).as("band_key"),
@@ -115,7 +105,7 @@ object StreamingNearDup {
             var maxTs = members.foldLeft(0L)((m, x) => math.max(m, x.tsMs))
             for (k <- arrivals) {
               for (m <- members if m.conv_id != k.conv_id) {
-                val score = sigJaccard(m.sig, k.sig)
+                val score = Hashing.signatureJaccard(m.sig, k.sig)
                 if (score >= threshold) {
                   val (a, b) =
                     if (m.conv_id < k.conv_id) (m.conv_id, k.conv_id)

@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.Bench
 
 /** Dump `.explain("formatted")` for the bench-headline query plans (and
-  * the fused sweep's internal stages, which the composite cluster_assign
-  * materializes eagerly) to files under a target directory — the
-  * before/after plan evidence for plans/r06/.
+  * the fused sweep's pre-checkpoint plan, which the composite
+  * cluster_assign materializes eagerly) to files under a target
+  * directory — the before/after plan evidence for plans/r06/.
   *
   *   sbt "runMain graft.operators.PlanDump /root/repo/plans/r06 before /root/testdata/sf0.1"
   */
@@ -50,21 +50,15 @@ object PlanDump {
     dump("window_latest_order", graft.SparkEntry.queries("q_window_latest_order")(spark, sfDir))
 
     // cluster_assign materializes its stages internally — dump the fused
-    // sweep's internal plans (the query's dominant cost) plus the final
-    // assignment tail over the materialized pairs.
+    // sweep's pre-checkpoint plan (the query's dominant cost) plus the
+    // final assignment tail over the materialized pairs.
     val d = docs().repartition(spark.sparkContext.defaultParallelism * 4).cache()
     d.count()
-    val sigs0 = FusedDetectors.signatures3(spark, d, cfg).cache()
-    val nDocs = sigs0.count()
-    val sigs = org.apache.spark.sql.GraftPlanBridge.planBoundary(sigs0.toDF)
-    val cands = PairSweep.pairs(spark,
-      FusedDetectors.taggedKeys(sigs, cfg, Seq("conv_id")), cfg.bucketCap,
-      keysEstimate = nDocs * (cfg.bands + cfg.simhashBlocks * 17L + 340L))
-      .dropDuplicates("doc_a", "doc_b", "k3")
-    dump("cluster_assign_fused_cands", cands)
-    val candsC = cands.cache(); candsC.count()
-    dump("cluster_assign_fused_verify",
-      FusedDetectors.verifyPairs(candsC, sigs, cfg, FusedDetectors.DefaultSlack))
+    val (verified, sigs) = FusedDetectors.verifiedFrame(spark, d, cfg,
+      FusedDetectors.MinHash | FusedDetectors.SimHash | FusedDetectors.Substring,
+      FusedDetectors.DefaultSlack)
+    dump("cluster_assign_fused_verify", verified)
+    sigs.unpersist(false)
     val pairs = ExactDedup.docDupPairs(spark, d.toDF).as[graft.DupPair]
       .unionByName(FusedDetectors.dupPairs(spark, d, cfg, withSubstring = true))
     dump("cluster_assign_tail", Clustering.assign(spark, d, pairs, cfg).toDF)

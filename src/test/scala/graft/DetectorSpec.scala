@@ -1,6 +1,7 @@
 package graft
 
 import graft.corpus.CorpusGen
+import graft.functions.Hashing
 import graft.operators._
 import org.apache.spark.sql.functions._
 
@@ -75,44 +76,125 @@ class DetectorSpec extends SparkSpec {
       "equivalence test is vacuous: a near-dup detector found no pairs")
   }
 
+  // The standalone detectors' kernels are graft_doc_sig with their single
+  // mask bit (MinHashLSH = 1, SimHashDetector = 2, SubstringDetector = 4).
   test("fused triple signatures are bit-identical to the standalone kernels") {
     import spark.implicits._
+    import FusedDetectors.{MinHash, SimHash, Substring}
     val cfg = DedupConfig.default
-    val f = FusedDetectors.signatures3(spark, docs, cfg)
+    val f = FusedDetectors.signatures(spark, docs, cfg, MinHash | SimHash | Substring)
       .select($"conv_id", $"sig", $"simhash", $"anchors")
       .as[(String, Array[Long], Long, Array[(Long, Long)])].collect()
       .map(t => t._1 -> ((t._2.toSeq, t._3, t._4.toSeq))).toMap
-    val base = FusedDetectors.signatures(spark, docs, cfg)
-      .select($"conv_id", $"sig", $"simhash")
-      .as[(String, Array[Long], Long)].collect()
-      .map(t => t._1 -> ((t._2.toSeq, t._3))).toMap
-    val an = SubstringDetector.anchorKeys(spark, docs, cfg)
-      .collect().groupBy(_.conv_id)
-      .map { case (cid, ks) => cid -> ks.map(k => (k.k_hi, k.k_lo)).toSeq.sorted }
-    assert(f.size == base.size)
+    val mh = FusedDetectors.signatures(spark, docs, cfg, MinHash)
+      .select($"conv_id", $"sig").as[(String, Array[Long])].collect()
+      .map(t => t._1 -> t._2.toSeq).toMap
+    val sh = FusedDetectors.signatures(spark, docs, cfg, SimHash)
+      .select($"conv_id", $"simhash").as[(String, Long)].collect().toMap
+    val an = FusedDetectors.signatures(spark, docs, cfg, Substring)
+      .select($"conv_id", $"anchors").as[(String, Array[(Long, Long)])].collect()
+      .map(t => t._1 -> t._2.toSeq).toMap
+    assert(f.size == mh.size && f.size == sh.size && f.size == an.size)
     f.foreach { case (cid, (sig, sim, anchors)) =>
-      assert((sig, sim) == base(cid), s"near-dup signatures differ for $cid")
-      // anchorKeys explodes the kernel's sorted-distinct array; compare as sorted seqs
-      assert(anchors.sorted == an.getOrElse(cid, Seq.empty),
-        s"anchor keys differ for $cid")
+      assert(sig == mh(cid), s"minhash sig differs for $cid")
+      assert(sim == sh(cid), s"simhash differs for $cid")
+      assert(anchors == an(cid), s"anchor keys differ for $cid")
     }
     assert(f.values.exists(_._3.nonEmpty), "vacuous: no doc produced anchors")
   }
 
   test("fused signatures are bit-identical to the standalone kernels") {
     import spark.implicits._
-    val f = FusedDetectors.signatures(spark, docs, DedupConfig.default)
+    import FusedDetectors.{MinHash, SimHash}
+    val cfg = DedupConfig.default
+    val f = FusedDetectors.signatures(spark, docs, cfg)
       .select($"conv_id", $"sig", $"simhash")
       .as[(String, Array[Long], Long)].collect().map(t => t._1 -> ((t._2.toSeq, t._3))).toMap
-    val mh = MinHashLSH.signatures(spark, docs, DedupConfig.default)
-      .collect().map(s => s.conv_id -> s.sig.toSeq).toMap
-    val sh = SimHashDetector.signatures(spark, docs, DedupConfig.default)
-      .collect().map(s => s.conv_id -> s.simhash).toMap
+    val mh = FusedDetectors.signatures(spark, docs, cfg, MinHash)
+      .select($"conv_id", $"sig").as[(String, Array[Long])].collect()
+      .map(t => t._1 -> t._2.toSeq).toMap
+    val sh = FusedDetectors.signatures(spark, docs, cfg, SimHash)
+      .select($"conv_id", $"simhash").as[(String, Long)].collect().toMap
     assert(f.size == mh.size)
     f.foreach { case (cid, (sig, sim)) =>
       assert(sig == mh(cid), s"minhash sig differs for $cid")
       assert(sim == sh(cid), s"simhash differs for $cid")
     }
+  }
+
+  test("graft_doc_sig is bit-identical to the composed Hashing primitives for every mask") {
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    val cfg = DedupConfig.default
+    graft.plans.GraftFunctions.register(spark)
+    val texts = docs.toDF.select($"conv_id", $"doc_text").as[(String, String)].collect().toMap
+    var anchored = false
+    for (mask <- 1 to 7) {
+      val df = docs.toDF.select($"conv_id", FusedDetectors.docSig($"doc_text", cfg, mask).as("s"))
+      val fields = Seq("mh" -> 1, "sh" -> 2, "an" -> 4).collect { case (f, b) if (mask & b) != 0 => f }
+      assert(df.select($"s.*").columns.toSeq == fields, s"mask $mask struct fields")
+      val got = df.collect()
+      assert(got.length == texts.size)
+      got.foreach { r =>
+        val cid = r.getString(0)
+        val t = texts(cid)
+        val s = r.getStruct(1)
+        if ((mask & 1) != 0)
+          assert(s.getSeq[Long](s.fieldIndex("mh")) == Hashing.minhashSignature(
+            Hashing.shingleHashes(t, cfg.shingleK), cfg.numHashes, cfg.seed).toSeq,
+            s"mask $mask: minhash differs for $cid")
+        if ((mask & 2) != 0)
+          assert(s.getAs[Long]("sh") == Hashing.simhash(Hashing.shingleHashes(t, cfg.simhashShingleK)),
+            s"mask $mask: simhash differs for $cid")
+        if ((mask & 4) != 0) {
+          val an = s.getSeq[Row](s.fieldIndex("an")).map(a => (a.getLong(0), a.getLong(1)))
+          val want = Hashing.substringAnchors128(t, cfg.substrQ, cfg.substrSample)
+            .grouped(2).map(p => (p(0), p(1))).toSeq
+          assert(an == want, s"mask $mask: anchors differ for $cid")
+          anchored ||= an.nonEmpty
+        }
+      }
+    }
+    assert(anchored, "vacuous: no doc produced anchors")
+  }
+
+  test("standalone detectors: repeated runs on distinct doc subsets do not accumulate cached blocks") {
+    import spark.implicits._
+    val cfg = DedupConfig.default
+    val subsets = (0 until 3).map(i => docs.filter(abs(hash($"conv_id")) % 3 =!= i))
+    val detectors = Seq[(String, Dataset[Doc] => Dataset[DupPair])](
+      "minhash" -> (d => MinHashLSH.dupPairs(spark, d, cfg)),
+      "simhash" -> (d => SimHashDetector.dupPairs(spark, d, cfg)),
+      "substring" -> (d => SubstringDetector.dupPairs(spark, d, cfg)))
+    for ((name, run) <- detectors) {
+      // settle: each detector keeps exactly one live result
+      run(docs).count()
+      val baseline = spark.sparkContext.getPersistentRDDs.size
+      subsets.foreach { d =>
+        assert(run(d).count() > 0, s"$name found no pairs on a subset")
+        assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
+          s"$name leaked cached blocks: ${spark.sparkContext.getPersistentRDDs.size} > $baseline")
+      }
+    }
+  }
+
+  test("single-detector and fused results stay readable while all four are held") {
+    import spark.implicits._
+    val cfg = DedupConfig.default
+    def rows(ds: Dataset[DupPair]): Set[(String, String, String, Double)] =
+      ds.toDF.select($"doc_a", $"doc_b", $"detector", $"score")
+        .as[(String, String, String, Double)].collect().toSet
+    val held = Seq(
+      MinHashLSH.dupPairs(spark, docs, cfg),
+      SimHashDetector.dupPairs(spark, docs, cfg),
+      SubstringDetector.dupPairs(spark, docs, cfg),
+      FusedDetectors.dupPairs(spark, docs, cfg, withSubstring = true))
+    // every handle is read only after all four exist: none retired another
+    val got = held.map(rows)
+    Seq("minhash", "simhash", "substring").zip(got).foreach { case (d, r) =>
+      assert(r.nonEmpty && r.forall(_._3 == d), s"$d result")
+    }
+    assert(got(3) == got(0) ++ got(1) ++ got(2))
   }
 
   test("substring detector links docs sharing the planted boilerplate block") {

@@ -17,30 +17,30 @@ class ExpressionSpec extends SparkSpec {
     "completely different content with other words entirely here",
     "")
 
-  test("graft_minhash_sig matches Hashing.minhashSignature") {
+  test("graft_doc_sig mh field matches Hashing.minhashSignature") {
     import spark.implicits._
     val got = texts.toDF("t")
-      .selectExpr("graft_minhash_sig(t, 5, 128, 42) AS sig")
+      .selectExpr("graft_doc_sig(t, 1, 5, 128, 42, 2, 32, 8).mh AS sig")
       .as[Array[Long]].collect()
     val want = texts.map(t =>
       Hashing.minhashSignature(Hashing.shingleHashes(t, 5), 128, 42))
     got.zip(want).foreach { case (g, w) => assert(g.sameElements(w)) }
   }
 
-  test("graft_simhash64 / band_hashes / substr_anchors / ball_keys parity") {
+  test("graft_doc_sig sh / band_hashes / substr_anchors128 / ball_keys parity") {
     import spark.implicits._
     val row = texts.take(1).toDF("t").selectExpr(
-      "graft_simhash64(t, 2) AS sh",
-      "graft_band_hashes(graft_minhash_sig(t, 5, 128, 42), 32, 4) AS bands",
-      "graft_substr_anchors(t, 3, 2) AS anchors",
-      "graft_ball_keys(graft_simhash64(t, 2), 4) AS balls").collect()(0)
+      "graft_doc_sig(t, 2, 5, 128, 42, 2, 32, 8).sh AS sh",
+      "graft_band_hashes(graft_doc_sig(t, 1, 5, 128, 42, 2, 32, 8).mh, 32, 4) AS bands",
+      "graft_substr_anchors128(t, 3, 2) AS anchors",
+      "graft_ball_keys(graft_doc_sig(t, 2, 5, 128, 42, 2, 32, 8).sh, 4) AS balls").collect()(0)
     val t = texts.head
     assert(row.getLong(0) == Hashing.simhash(Hashing.shingleHashes(t, 2)))
     val sig = Hashing.minhashSignature(Hashing.shingleHashes(t, 5), 128, 42)
     assert(row.getSeq[Long](1).toArray.sameElements(
       Array.tabulate(32)(b => Hashing.bandHash(sig, b, 4))))
-    assert(row.getSeq[Long](2).toArray.sorted.sameElements(
-      Hashing.substringAnchors(t, 3, 2).sorted))
+    val anchors = row.getSeq[org.apache.spark.sql.Row](2).flatMap(a => Seq(a.getLong(0), a.getLong(1)))
+    assert(anchors.nonEmpty && anchors.toArray.sameElements(Hashing.substringAnchors128(t, 3, 2)))
     assert(row.getSeq[Long](3).toArray.sameElements(
       Hashing.simhashBallKeys(Hashing.simhash(Hashing.shingleHashes(t, 2)), 4)))
   }
@@ -49,7 +49,8 @@ class ExpressionSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq((texts(0), texts(0)), (texts(0), texts(1))).toDF("a", "b")
       .selectExpr(
-        "graft_sig_jaccard(graft_minhash_sig(a, 5, 128, 42), graft_minhash_sig(b, 5, 128, 42)) AS j")
+        "graft_sig_jaccard(graft_doc_sig(a, 1, 5, 128, 42, 2, 32, 8).mh, " +
+          "graft_doc_sig(b, 1, 5, 128, 42, 2, 32, 8).mh) AS j")
       .as[Double].collect()
     assert(df(0) == 1.0)
     assert(df(1) < 0.2)
@@ -58,7 +59,7 @@ class ExpressionSpec extends SparkSpec {
   test("null propagation: null text yields null signature") {
     import spark.implicits._
     val got = Seq[Option[String]](None, Some("a b c")).toDF("t")
-      .selectExpr("graft_minhash_sig(t, 5, 128, 42) AS sig")
+      .selectExpr("graft_doc_sig(t, 7, 5, 128, 42, 2, 32, 8) AS sig")
       .collect()
     assert(got(0).isNullAt(0))
     assert(!got(1).isNullAt(0))
@@ -83,9 +84,9 @@ class ExpressionSpec extends SparkSpec {
       try body finally { logger.removeAppender(appender); appender.stop() }
       seen.toArray.map(_.toString).toSeq
     }
-    val before = registry.lookupFunction(FunctionIdentifier("graft_minhash_sig"))
+    val before = registry.lookupFunction(FunctionIdentifier("graft_doc_sig"))
     assert(warnings(GraftFunctions.register(spark)).isEmpty) // beforeAll registered once
-    assert(registry.lookupFunction(FunctionIdentifier("graft_minhash_sig")).exists(_ eq before.get))
+    assert(registry.lookupFunction(FunctionIdentifier("graft_doc_sig")).exists(_ eq before.get))
     // the capture sees the warning an unguarded re-registration logs
     val (name, builder) = GraftFunctions.builders.head
     val forced = warnings(registry.registerFunction(
@@ -96,7 +97,7 @@ class ExpressionSpec extends SparkSpec {
   test("non-literal config argument is rejected") {
     import spark.implicits._
     val e = intercept[Exception] {
-      Seq(("x", 3)).toDF("t", "k").selectExpr("graft_minhash_sig(t, k, 128, 42)").collect()
+      Seq(("x", 3)).toDF("t", "k").selectExpr("graft_doc_sig(t, 1, k, 128, 42, 2, 32, 8)").collect()
     }
     assert(e.getMessage.contains("literal") || e.getMessage.contains("foldable"),
       e.getMessage.take(200))

@@ -57,17 +57,20 @@ class PlanSpec extends SparkSpec {
   test("minhash signature projection runs inside WholeStageCodegen") {
     import spark.implicits._
     graft.plans.GraftFunctions.register(spark)
-    val df = spark.read.parquet(s"$dir/documents.parquet")
-      .select($"doc_id",
-        call_function("graft_minhash_sig", $"text", lit(5), lit(128), lit(42L)).as("sig"))
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    val lines = plan.linesIterator.toSeq
-    val sigLine = lines.indexWhere(_.contains("graft_minhash_sig"))
-    assert(sigLine >= 0, plan.take(800))
-    // '*(n)' marks a WholeStageCodegen span — the signature expression
-    // compiles into generated code, no fallback Project
-    assert(lines(sigLine).contains("*("), lines(sigLine))
+    // the MinHash-only, near-dup and three-detector kernel variants
+    for (mask <- Seq(1, 3, 7)) {
+      val df = spark.read.parquet(s"$dir/documents.parquet")
+        .select($"doc_id", call_function("graft_doc_sig", $"text", lit(mask),
+          lit(5), lit(128), lit(42L), lit(2), lit(32), lit(8)).as("sig"))
+      df.collect()
+      val plan = df.queryExecution.executedPlan.toString
+      val lines = plan.linesIterator.toSeq
+      val sigLine = lines.indexWhere(_.contains("graft_doc_sig"))
+      assert(sigLine >= 0, plan.take(800))
+      // '*(n)' marks a WholeStageCodegen span — the signature expression
+      // compiles into generated code, no fallback Project
+      assert(lines(sigLine).contains("*("), lines(sigLine))
+    }
     // note: inside the full pipeline Catalyst fuses this expression
     // into the doc-assembly aggregate's result projection (verified by
     // inspection; ObjectHashAggregate output carries the sig column) —
@@ -75,12 +78,21 @@ class PlanSpec extends SparkSpec {
   }
 
   test("LSH verification join is an equi-join (hash-partitioned, no cartesian)") {
-    import spark.implicits._
     val docs = DocAssembly.assemble(spark, SparkEntry.transcriptsView(spark, dir))
-    val pairs = MinHashLSH.dupPairs(spark, docs, DedupConfig.default)
-    val plan = executed(pairs.toDF)
-    assert(!plan.contains("CartesianProduct"), "cartesian in LSH path")
-    assert(!plan.contains("BroadcastNestedLoopJoin"), "nested-loop join in LSH path")
+    // the spine's pre-checkpoint frame: the returned checkpoint's scan
+    // would hide the joins and pass vacuously
+    for (mask <- Seq(1, 2, 4, 7)) {
+      val (verified, sigs) = FusedDetectors.verifiedFrame(spark, docs, DedupConfig.default,
+        mask, FusedDetectors.DefaultSlack)
+      val plan = executed(verified)
+      sigs.unpersist(false)
+      assert(!plan.contains("CartesianProduct"), s"cartesian in mask-$mask path")
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested-loop join in mask-$mask path")
+      // only the verified detectors attach signatures
+      if (mask == 4) assert(!plan.contains("Join"), s"substring-only sweep joins:\n$plan")
+      else assert(Seq("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin").exists(plan.contains),
+        s"mask-$mask verify has no equi-join:\n$plan")
+    }
   }
 
   test("IVF and semantic-dedup plans are equi-joins (no cartesian, no nested loop)") {
